@@ -48,9 +48,11 @@ def _default_literal_mode_confirmed() -> bool:
     ``spark.sql.parser.escapedStringLiterals`` as false. The legacy/
     Hive-compat true mode keeps backslashes literal, so ``_render``'s
     escaping would produce WRONG predicates for quote/backslash keys.
-    Session conf is process-global, so when this thread has no active
-    session (``run_per_table`` workers don't inherit the thread-local)
-    the process-wide instantiated session answers for it — the per-key
+    SQL conf is per session, but a trickle session mirrors its parent's
+    runtime conf (``session.trickle_session``), so the parent's answer
+    holds for both. When this thread has no active session
+    (``run_per_table`` workers don't inherit the thread-local) the
+    process-wide instantiated session answers for it — the per-key
     ``Column.isin`` fallback engages only when NO session is reachable
     at all (then the mode genuinely cannot be known)."""
     spark = SparkSession.getActiveSession() or SparkSession._instantiatedSession

@@ -38,7 +38,7 @@ from presencia_etl_spark.operators.dedup import (
     band_rows,
     minhash_signatures,
 )
-from presencia_etl_spark.session import trickle_scope as _no_aqe
+from presencia_etl_spark.session import in_session, trickle_session
 from presencia_etl_spark.sinks.locking import single_writer
 
 SIG_DIR = "signatures"
@@ -189,7 +189,6 @@ def _register_collected(
     index_path: str,
     rows: list,
     id_type,
-    auto_compact: bool = True,
 ) -> dict:
     """Append a TRICKLE batch's already-collected (doc_id, sig, bands)
     rows to the index — pure driver pyarrow writes, zero Spark jobs.
@@ -262,19 +261,10 @@ def _register_collected(
     meta["appends"] = meta.get("appends", 0) + 1
     with open(_meta_path(index_path), "w") as f:
         json.dump(meta, f)
-    compacted = False
-    due = meta["appends"] >= COLLECTED_COMPACT_EVERY
-    if due and auto_compact:
+    compacted = meta["appends"] >= COLLECTED_COMPACT_EVERY
+    if compacted:
         compact_minhash_index(spark, index_path)
-        compacted = True
-    # auto_compact=False: the admit loop runs the (corpus-scale) index
-    # compaction itself, OUTSIDE its trickle conf scope.
-    return {
-        "added": added,
-        "docs": meta["docs"],
-        "compacted": compacted,
-        "compact_due": due and not compacted,
-    }
+    return {"added": added, "docs": meta["docs"], "compacted": compacted}
 
 
 # Auto-compaction threshold for driver-side micro-appends (the admit
@@ -664,13 +654,14 @@ def admit_batch(
     loop a 100 TB training corpus actually runs — per batch, work is
     O(|batch|), never O(|history|).
 
-    Conf-scope discipline: the bounded probe decision and the trickle
-    path run under ``session.trickle_scope`` (their frames are KB-sized
-    and their strategy static); a batch past the trickle bound falls
-    back to the all-Spark path UNDER SESSION DEFAULTS (AQE on, full
-    shuffle width — it is corpus-scale by definition), and the every-
-    Nth-append index compaction triggered by trickle registration also
-    runs outside the scope."""
+    Conf discipline: the bounded probe decision and the trickle path
+    run in ``session.trickle_session`` (their frames are KB-sized and
+    their strategy static; the batch's cached frames move there by
+    ``session.in_session``); a batch past the trickle bound falls back
+    to the all-Spark path in ``spark`` (AQE on, full shuffle width — it
+    is corpus-scale by definition), and so does the every-Nth-append
+    index compaction triggered by trickle registration. The returned
+    frame belongs to ``spark``."""
     # An id already registered in the index IS the admitted doc — a replay
     # must not re-probe (it would pass, its self-pair is id-excluded) nor
     # re-register its signatures. The id probe reads only the doc_id
@@ -697,21 +688,20 @@ def admit_batch(
         # this driver copy. Bounded: past the limit the batch is not a
         # trickle and csig stays None.
         lim = max(1, PROBE_PUSHDOWN_LIMIT // meta["bands"])
+        ts = trickle_session(spark)
+        tsig = in_session(ts, fsig)
         csig = None
         try:
             _pa_type(fsig.schema["doc_id"].dataType)  # driver-writable id?
-            with _no_aqe(spark):
-                csig = (
-                    fsig.select(
-                        "doc_id",
-                        "sig",
-                        band_array(
-                            meta["n_hashes"], meta["bands"]
-                        ).alias("bands"),
-                    )
-                    .limit(lim + 1)
-                    .collect()
+            csig = (
+                tsig.select(
+                    "doc_id",
+                    "sig",
+                    band_array(meta["n_hashes"], meta["bands"]).alias("bands"),
                 )
+                .limit(lim + 1)
+                .collect()
+            )
             if len(csig) > lim:
                 csig = None
         except TypeError:
@@ -724,16 +714,20 @@ def admit_batch(
                     "the index identity, the replay key, and the chunk "
                     "address); filter or assign ids upstream."
                 )
-            with _no_aqe(spark):
-                admitted, pending_compact = _admit_trickle(
-                    spark, fresh, fsig, csig, meta, index_path, id_col,
-                    text_col, est_threshold, update_index,
+            admitted, dup_ids = _admit_trickle(
+                ts, in_session(ts, fresh), tsig, csig, meta, index_path,
+                id_col, text_col, est_threshold,
+            )
+            if update_index:
+                # Driver-side append; a due index compaction is a
+                # corpus-scale rewrite and runs in ``spark``.
+                _register_collected(
+                    spark,
+                    index_path,
+                    [r for r in csig if r["doc_id"] not in dup_ids],
+                    fsig.schema["doc_id"].dataType,
                 )
-            if pending_compact:
-                # Corpus-scale rewrite of the whole index: session
-                # defaults, never the trickle conf.
-                compact_minhash_index(spark, index_path)
-            return admitted
+            return in_session(spark, admitted)
         # Corpus-sized batch: all-Spark probe + staged append writes,
         # session defaults throughout.
         matches = query_minhash_index(
@@ -774,14 +768,12 @@ def _admit_trickle(
     id_col: str,
     text_col: str,
     est_threshold: float,
-    update_index: bool,
 ):
     """Trickle path: the probe executes ONCE, as the (bounded — the
-    duplicate set is a subset of the collected batch) dup-id collect;
-    index registration is a pure-driver pyarrow write of the already-
-    collected signatures/bands — zero further Spark jobs. Returns
-    (admitted, pending_compact); the CALLER runs any due compaction
-    outside the trickle conf scope."""
+    duplicate set is a subset of the collected batch) dup-id collect.
+    Returns (admitted, dup_ids); the caller registers the survivors'
+    already-collected signatures/bands with a pure-driver pyarrow write
+    — zero further Spark jobs."""
     keys = list({b["band_hash"] for r in csig for b in r["bands"]})
     # eager=False: the probe plan is consumed exactly once, by the dup-id
     # collect below. Everything the lazy plan re-reads (`fresh`, the
@@ -805,15 +797,4 @@ def _admit_trickle(
     # and it keeps the returned frame independent of the caches the
     # caller unpersists (downstream chunk/pack must not re-run the gate
     # chain per consumer).
-    admitted = admitted.localCheckpoint(eager=True)
-    pending_compact = False
-    if update_index:
-        reg = _register_collected(
-            spark,
-            index_path,
-            [r for r in csig if r["doc_id"] not in dup_ids],
-            fsig.schema["doc_id"].dataType,
-            auto_compact=False,
-        )
-        pending_compact = reg.get("compact_due", False)
-    return admitted, pending_compact
+    return admitted.localCheckpoint(eager=True), dup_ids

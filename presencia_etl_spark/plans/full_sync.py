@@ -86,31 +86,16 @@ def run_per_table(
     sync wall-clock of Σ(tables) and max(tables). Errors propagate after
     all submitted tables finish (no half-dispatched pool teardown);
     result order follows the registry, not completion."""
-    # Corpus-scale dispatch: hold the shared side of the conf lock for
-    # the WHOLE fan-out — no trickle_scope (AQE off, 8 shuffle
-    # partitions) can open mid-sync on another thread — and refuse to
-    # fan out from inside one (the workers would silently inherit the
-    # trickle conf).
-    from presencia_etl_spark.session import corpus_section, corpus_work_marker
+    names = [n for n in configs if n in tables]
+    if max_parallel <= 1 or len(names) <= 1:
+        return {n: work(n, configs[n]) for n in names}
+    import concurrent.futures
 
-    def guarded(name, cfg):
-        # The marker makes a trickle_scope attempt inside a work function
-        # raise loudly (it would deadlock against the dispatcher's reader
-        # token otherwise).
-        with corpus_work_marker():
-            return work(name, cfg)
-
-    with corpus_section():
-        names = [n for n in configs if n in tables]
-        if max_parallel <= 1 or len(names) <= 1:
-            return {n: guarded(n, configs[n]) for n in names}
-        import concurrent.futures
-
-        with concurrent.futures.ThreadPoolExecutor(
-            max_workers=min(max_parallel, len(names))
-        ) as pool:
-            futs = {n: pool.submit(guarded, n, configs[n]) for n in names}
-            return {n: f.result() for n, f in futs.items()}
+    with concurrent.futures.ThreadPoolExecutor(
+        max_workers=min(max_parallel, len(names))
+    ) as pool:
+        futs = {n: pool.submit(work, n, configs[n]) for n in names}
+        return {n: f.result() for n, f in futs.items()}
 
 
 def full_sync(

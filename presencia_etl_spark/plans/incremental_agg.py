@@ -86,8 +86,7 @@ COUNT_COL = "n_rows"
 # A refresh is a TRICKLE shape (static strategy, KB-to-MB frames) only
 # when the pending delta files are small; past this, the corpus-scale
 # fallback (bucket-count sizing, semi-join retraction, snapshot rewrite)
-# must run under SESSION defaults — AQE on, full shuffle width — and must
-# not hold the process-global trickle mutex for its duration. Sized so
+# must run under SESSION defaults — AQE on, full shuffle width. Sized so
 # every pushdown-eligible refresh (≤ KEY_PUSHDOWN_LIMIT rows of full row
 # images) lands under it with room to spare.
 TRICKLE_DELTA_MAX_BYTES = 16 << 20
@@ -303,35 +302,27 @@ def build_agg_snapshot(
     kll_cols: list[str] | None = None,
 ) -> dict:
     """Full compute of the aggregate from the MOR state's current
-    snapshot; records the state's sequence as the refresh cursor. A full
-    build scans the whole base — corpus-scale by definition — so it
-    holds the shared conf-lock side throughout: a trickle scope opening
-    mid-scan on another thread must not throttle it to AQE-off /
-    8-partition conf (this also covers the rebuild fallback of
-    ``refresh_agg_snapshot``)."""
-    from presencia_etl_spark.session import corpus_section
-
+    snapshot; records the state's sequence as the refresh cursor."""
     sum_cols = list(sum_cols or [])
     minmax_cols = list(minmax_cols or [])
     hll_cols = list(hll_cols or [])
     kll_cols = list(kll_cols or [])
     os.makedirs(agg_path, exist_ok=True)
     _recover_interrupted_refresh(agg_path)
-    with corpus_section():
-        hist = mor_history(mor_path)
-        out = _full_aggregate(
-            read_mor(spark, mor_path), group_cols, sum_cols, minmax_cols,
-            hll_cols, kll_cols,
-        )
-        meta = {
-            "as_of_seq": hist["seq"],
-            "group_cols": list(group_cols),
-            "sum_cols": sum_cols,
-            "minmax_cols": minmax_cols,
-            "hll_cols": hll_cols,
-            "kll_cols": kll_cols,
-        }
-        _write_snapshot(out, agg_path, meta)
+    hist = mor_history(mor_path)
+    out = _full_aggregate(
+        read_mor(spark, mor_path), group_cols, sum_cols, minmax_cols,
+        hll_cols, kll_cols,
+    )
+    meta = {
+        "as_of_seq": hist["seq"],
+        "group_cols": list(group_cols),
+        "sum_cols": sum_cols,
+        "minmax_cols": minmax_cols,
+        "hll_cols": hll_cols,
+        "kll_cols": kll_cols,
+    }
+    _write_snapshot(out, agg_path, meta)
     return {"mode": "build", "as_of_seq": hist["seq"]}
 
 
@@ -346,16 +337,15 @@ def refresh_agg_snapshot(
 
     A TRICKLE-sized refresh (pending delta files ≤
     ``TRICKLE_DELTA_MAX_BYTES``, decided from fs metadata BEFORE any job)
-    runs under ``session.trickle_scope``: its frames are bounded by
+    runs in ``session.trickle_session``: its frames are bounded by
     |changes| and its strategy is static (broadcast merge joins,
     In-pushdown retraction), so AQE's per-exchange re-plan jobs and the
     LIMIT ramp of the sizing collect are pure fixed cost there. A
     corpus-sized refresh — and the noop/rebuild decisions, also made from
-    fs metadata — keeps the session's AQE and shuffle width and never
-    holds the trickle mutex: forcing millions of changed rows through 8
-    static shuffle partitions would serialize on the scope lock AND plan
-    badly."""
-    from presencia_etl_spark.session import corpus_section, trickle_scope
+    fs metadata — runs in ``spark`` with its AQE and shuffle width:
+    forcing millions of changed rows through 8 static shuffle partitions
+    would plan badly."""
+    from presencia_etl_spark.session import trickle_session
 
     _recover_interrupted_refresh(agg_path)
     meta = _read_meta(agg_path)
@@ -406,20 +396,11 @@ def refresh_agg_snapshot(
     if r is not None:
         return r
     if pending <= TRICKLE_DELTA_MAX_BYTES:
-        with trickle_scope(spark):
-            return _refresh_agg_snapshot_inner(
-                spark, mor_path, agg_path, meta, since, cur, group_cols,
-                sum_cols, minmax_cols, hll_cols, kll_cols,
-            )
-    # Corpus-sized fold: the shared conf-lock side guarantees SESSION
-    # defaults for the whole multi-GB run, not just at entry — a trickle
-    # scope opening mid-fold on another thread would otherwise throttle
-    # it to AQE-off / 8 shuffle partitions.
-    with corpus_section():
-        return _refresh_agg_snapshot_inner(
-            spark, mor_path, agg_path, meta, since, cur, group_cols,
-            sum_cols, minmax_cols, hll_cols, kll_cols,
-        )
+        spark = trickle_session(spark)
+    return _refresh_agg_snapshot_inner(
+        spark, mor_path, agg_path, meta, since, cur, group_cols,
+        sum_cols, minmax_cols, hll_cols, kll_cols,
+    )
 
 
 # Driver fast-path bounds: the pending change feed must be KB-sized AND

@@ -190,9 +190,9 @@ def _check_spec(
 
 
 class _DenseRefresh(Exception):
-    """Raised inside a scoped refresh when the affected join-value set
-    exceeds the pushdown bound (left views only) — caught OUTSIDE the
-    conf scope and answered with a rebuild."""
+    """Raised inside a refresh when the affected join-value set exceeds
+    the pushdown bound (left views only) — answered with a rebuild in
+    the caller's session."""
 
 
 def _join_frames(
@@ -574,58 +574,52 @@ def build_join_view(
     """Full materialization of ``A inner-join B`` (``how`` in
     {"inner", "left", "right", "full"} — outer rows NULL-extended on the
     missing side) into a MOR view state;
-    records both sources' sequences as the refresh cursors. A full build
-    scans both bases — corpus-scale by definition — so it holds the
-    shared conf-lock side throughout (also covers the rebuild fallback
-    of ``refresh_join_view``)."""
-    from presencia_etl_spark.session import corpus_section
-
+    records both sources' sequences as the refresh cursors."""
     pairs = _norm_on(on)
     if how not in ("inner", "left", "right", "full"):
         raise ValueError(
             f"how must be 'inner', 'left', 'right' or 'full', got {how!r}"
         )
-    with corpus_section():
-        ha, hb = mor_history(a_path), mor_history(b_path)
-        if a_cols is None or b_cols is None:
-            a_probe = read_mor(spark, a_path, buckets=[])
-            b_probe = read_mor(spark, b_path, buckets=[])
-            if a_cols is None:
-                a_cols = _data_cols(a_probe)
-            if b_cols is None:
-                b_cols = _data_cols(b_probe)
-        a_cols, b_cols = list(dict.fromkeys(a_cols)), list(dict.fromkeys(b_cols))
-        _check_spec(a_key_cols, b_key_cols, a_cols, b_cols, pairs)
-        meta = {
-            "a_path": a_path,
-            "b_path": b_path,
-            "on": [list(p) for p in pairs],
-            "a_key_cols": list(a_key_cols),
-            "b_key_cols": list(b_key_cols),
-            "a_cols": a_cols,
-            "b_cols": b_cols,
-            "num_buckets": num_buckets,
-            "compact_every": compact_every,
-            "compact_keep_last": compact_keep_last,
-            "how": how,
-            "a_seq": ha["seq"],
-            "b_seq": hb["seq"],
-        }
-        joined = _materialize(spark, meta, ha["seq"], hb["seq"])
-        r = merge_upsert_mor(
-            spark,
-            joined,
-            view_path,
-            key_cols=list(a_key_cols) + list(b_key_cols),
-            num_buckets=num_buckets,
-            compact_every=compact_every,
-            compact_keep_last=compact_keep_last,
-            # a full snapshot merge into a (possibly re-built) view is the
-            # delete_missing shape: vanished pairs tombstone atomically
-            # with the upserts.
-            delete_missing=True,
-        )
-        _write_meta(view_path, meta)
+    ha, hb = mor_history(a_path), mor_history(b_path)
+    if a_cols is None or b_cols is None:
+        a_probe = read_mor(spark, a_path, buckets=[])
+        b_probe = read_mor(spark, b_path, buckets=[])
+        if a_cols is None:
+            a_cols = _data_cols(a_probe)
+        if b_cols is None:
+            b_cols = _data_cols(b_probe)
+    a_cols, b_cols = list(dict.fromkeys(a_cols)), list(dict.fromkeys(b_cols))
+    _check_spec(a_key_cols, b_key_cols, a_cols, b_cols, pairs)
+    meta = {
+        "a_path": a_path,
+        "b_path": b_path,
+        "on": [list(p) for p in pairs],
+        "a_key_cols": list(a_key_cols),
+        "b_key_cols": list(b_key_cols),
+        "a_cols": a_cols,
+        "b_cols": b_cols,
+        "num_buckets": num_buckets,
+        "compact_every": compact_every,
+        "compact_keep_last": compact_keep_last,
+        "how": how,
+        "a_seq": ha["seq"],
+        "b_seq": hb["seq"],
+    }
+    joined = _materialize(spark, meta, ha["seq"], hb["seq"])
+    r = merge_upsert_mor(
+        spark,
+        joined,
+        view_path,
+        key_cols=list(a_key_cols) + list(b_key_cols),
+        num_buckets=num_buckets,
+        compact_every=compact_every,
+        compact_keep_last=compact_keep_last,
+        # a full snapshot merge into a (possibly re-built) view is the
+        # delete_missing shape: vanished pairs tombstone atomically
+        # with the upserts.
+        delete_missing=True,
+    )
+    _write_meta(view_path, meta)
     return {"mode": "build", "a_seq": ha["seq"], "b_seq": hb["seq"], **r}
 
 
@@ -641,11 +635,10 @@ def refresh_join_view(spark: SparkSession, view_path: str) -> dict:
 
     Trickle-sized refreshes (pending source delta bytes ≤
     ``TRICKLE_DELTA_MAX_BYTES``, fs metadata, decided before any job)
-    run under ``session.trickle_scope`` — every frame is O(changes) and
-    the strategy is static. Corpus-sized ones hold ``corpus_section``
-    for the duration (the noop/rebuild decisions are fs-metadata-only
-    and stay unscoped)."""
-    from presencia_etl_spark.session import corpus_section, trickle_scope
+    run in ``session.trickle_session`` — every frame is O(changes) and
+    the strategy is static. Corpus-sized ones and the rebuild run in
+    ``spark``."""
+    from presencia_etl_spark.session import trickle_session
 
     meta = _read_meta(view_path)
     if meta.get("nway"):
@@ -703,15 +696,12 @@ def refresh_join_view(spark: SparkSession, view_path: str) -> dict:
     )
     if r is not None:
         return r
+    ss = trickle_session(spark) if pending <= TRICKLE_DELTA_MAX_BYTES else spark
     try:
-        if pending <= TRICKLE_DELTA_MAX_BYTES:
-            with trickle_scope(spark):
-                return _refresh_inner(spark, view_path, meta, ha, hb)
-        with corpus_section():
-            return _refresh_inner(spark, view_path, meta, ha, hb)
+        return _refresh_inner(ss, view_path, meta, ha, hb)
     except _DenseRefresh:
         # dense change-value set on a LEFT view: unbounded match-count
-        # probes would not pay — one honest rebuild (outside any scope).
+        # probes would not pay — one honest rebuild, in ``spark``.
         return _rebuild()
 
 

@@ -219,42 +219,39 @@ def build_join_view_nway(
     dangling row's view key renders the missing dim keys as ''
     (normalize_key's NULL form), so matched↔unmatched transitions are
     ordinary upsert+tombstone pairs in the view's change feed."""
-    from presencia_etl_spark.session import corpus_section
-
     sources = _check_nway_spec([dict(s) for s in sources], how=how)
-    with corpus_section():
-        seqs = [mor_history(s["path"])["seq"] for s in sources]
-        meta = {
-            "nway": True,
-            "how": how,
-            "sources": [
-                {
-                    "path": s["path"],
-                    "key_cols": list(s["key_cols"]),
-                    "cols": list(s["cols"]),
-                    "on": [list(p) for p in (s.get("on") or [])],
-                    "edges": [list(e) for e in s.get("edges", [])],
-                }
-                for s in sources
-            ],
-            "num_buckets": num_buckets,
-            "compact_every": compact_every,
-            "compact_keep_last": compact_keep_last,
-            "seqs": seqs,
-        }
-        joined = _materialize_nway(spark, meta, seqs)
-        key_cols = [c for s in sources for c in s["key_cols"]]
-        r = merge_upsert_mor(
-            spark,
-            joined,
-            view_path,
-            key_cols=key_cols,
-            num_buckets=num_buckets,
-            compact_every=compact_every,
-            compact_keep_last=compact_keep_last,
-            delete_missing=True,
-        )
-        _write_meta(view_path, meta)
+    seqs = [mor_history(s["path"])["seq"] for s in sources]
+    meta = {
+        "nway": True,
+        "how": how,
+        "sources": [
+            {
+                "path": s["path"],
+                "key_cols": list(s["key_cols"]),
+                "cols": list(s["cols"]),
+                "on": [list(p) for p in (s.get("on") or [])],
+                "edges": [list(e) for e in s.get("edges", [])],
+            }
+            for s in sources
+        ],
+        "num_buckets": num_buckets,
+        "compact_every": compact_every,
+        "compact_keep_last": compact_keep_last,
+        "seqs": seqs,
+    }
+    joined = _materialize_nway(spark, meta, seqs)
+    key_cols = [c for s in sources for c in s["key_cols"]]
+    r = merge_upsert_mor(
+        spark,
+        joined,
+        view_path,
+        key_cols=key_cols,
+        num_buckets=num_buckets,
+        compact_every=compact_every,
+        compact_keep_last=compact_keep_last,
+        delete_missing=True,
+    )
+    _write_meta(view_path, meta)
     return {"mode": "build", "seqs": seqs, **r}
 
 
@@ -265,8 +262,9 @@ def refresh_join_view_nway(spark: SparkSession, view_path: str) -> dict:
     graph traversal with key-pruned big-side probes, netted, and landed
     as ONE atomic mixed merge. Falls back to a full rebuild when any
     source compacted past its cursor (the rebuild is a delete_missing
-    merge — the view's own feed stays continuous)."""
-    from presencia_etl_spark.session import corpus_section, trickle_scope
+    merge — the view's own feed stays continuous). A trickle-sized
+    refresh runs in ``session.trickle_session``."""
+    from presencia_etl_spark.session import trickle_session
 
     meta = _read_meta(view_path)
     if not meta.get("nway"):
@@ -321,15 +319,12 @@ def refresh_join_view_nway(spark: SparkSession, view_path: str) -> dict:
         return r
     from presencia_etl_spark.plans.incremental_join import _DenseRefresh
 
+    ss = trickle_session(spark) if pending <= TRICKLE_DELTA_MAX_BYTES else spark
     try:
-        if pending <= TRICKLE_DELTA_MAX_BYTES:
-            with trickle_scope(spark):
-                return _refresh_nway_inner(spark, view_path, meta, old, new)
-        with corpus_section():
-            return _refresh_nway_inner(spark, view_path, meta, old, new)
+        return _refresh_nway_inner(ss, view_path, meta, old, new)
     except _DenseRefresh:
         # a dense dim re-key on a LEFT star: unbounded affected-fact
-        # probes would not pay — one honest rebuild (outside any scope)
+        # probes would not pay — one honest rebuild, in ``spark``
         r = build_join_view_nway(
             spark,
             [dict(s) for s in srcs],
@@ -546,7 +541,7 @@ def _driver_left_dim_term(
         _canon_row,
         _probe_map,
     )
-    from presencia_etl_spark.session import trickle_allowed, trickle_scope
+    from presencia_etl_spark.session import trickle_session
     from presencia_etl_spark.sinks import driver_mor as dm
     from presencia_etl_spark.sinks.mor import KEY_PUSHDOWN_LIMIT
 
@@ -577,15 +572,10 @@ def _driver_left_dim_term(
     # 2 × n_aff rows — bound the collect so the landing can't overflow
     # the driver merge after the probes already ran
     bound = min(KEY_PUSHDOWN_LIMIT, dm.DRIVER_BATCH_MAX_KEYS // 2)
-    probe = read_mor(spark, srcs[0]["path"], as_of_seq=new[0])
+    probe = read_mor(trickle_session(spark), srcs[0]["path"], as_of_seq=new[0])
     for fc, cvs in per_col.items():
         probe = probe.filter(in_list(fc, cvs))
-    probe = probe.select(*fact_cols).limit(bound + 1)
-    if trickle_allowed():
-        with trickle_scope(spark):
-            rows = probe.collect()
-    else:
-        rows = probe.collect()
+    rows = probe.select(*fact_cols).limit(bound + 1).collect()
     if len(rows) > bound:
         raise dm.DriverDecline(
             "affected fact rows exceed the driver bound",

@@ -245,30 +245,22 @@ def _rebuild_head(
     (measure DESC, group ASC). TakeOrderedAndProject — a scan plus
     per-partition heaps, no full sort, no shuffle of the snapshot. The
     ``buffer``-th measure becomes the eviction floor; when every group
-    fits there is no floor (nothing hidden)."""
-    from presencia_etl_spark.session import corpus_section, trickle_scope
+    fits there is no floor (nothing hidden). A trickle-sized snapshot
+    is read in ``session.trickle_session``."""
+    from presencia_etl_spark.session import trickle_session
 
     group_cols, measure = spec["group_cols"], spec["measure"]
     buffer = spec["buffer"]
 
-    def _take(spark):
-        snap = read_agg_snapshot(spark, agg_path).select(*group_cols, measure)
-        snap = snap.where(F.col(measure).isNotNull())
-        return (
-            snap.orderBy(
-                F.col(measure).desc(),
-                *[F.col(g).asc() for g in group_cols],
-            )
-            .limit(buffer)
-            .collect()
-        )
-
     if _snapshot_bytes(agg_path) <= TRICKLE_DELTA_MAX_BYTES:
-        with trickle_scope(spark):
-            taken = _take(spark)
-    else:
-        with corpus_section():
-            taken = _take(spark)
+        spark = trickle_session(spark)
+    snap = read_agg_snapshot(spark, agg_path).select(*group_cols, measure)
+    taken = (
+        snap.where(F.col(measure).isNotNull())
+        .orderBy(F.col(measure).desc(), *[F.col(g).asc() for g in group_cols])
+        .limit(buffer)
+        .collect()
+    )
     rows = [r.asDict() for r in taken]
     floor = rows[-1][measure] if len(rows) == buffer else None
     schema = _head_schema(agg_path, group_cols, measure)

@@ -177,27 +177,13 @@ def sync_replica(
             dirty = dcmp.dirty
             if dcmp.tgt_digest is None:
                 tdig = None  # kill switch: hand the merge nothing either
-        src = read_managed_pruned(spark, source_path, dirty)
-        # Strip the source's PER-REPLICA surrogates: its bucket column
-        # reflects ITS layout/modulus (a flat target must not inherit
-        # one), and its audit identity (id/created_at/updated_at)
-        # belongs to that replica — the target keeps/assigns its own.
-        # row_hash stays: it is data-only and trusted, so the merge
-        # never re-hashes the source.
-        src = src.drop("_kb", "id", "created_at", "updated_at")
-
         # Conf regime, decided from the DIGESTS (pure metadata, before
         # any job — the CLAUDE.md trickle rule): a sparse managed sync's
         # classify touches only the dirty micro-buckets' rows, known
         # here per bucket, and its strategy is static — under session
         # conf a ONE-KEY sync at 60M ran 38 AQE re-plan jobs with
         # 256-task exchanges (initialPartitionNum, sized for corpus
-        # joins). Tiny dirty sets take trickle conf; everything else
-        # holds the corpus section so no scope flips conf mid-merge.
-        # Degrades to corpus conf (never an error) when composed under
-        # a fan-out worker.
-        from presencia_etl_spark import session as _sess
-
+        # joins). Tiny dirty sets read and merge in the trickle session.
         est_rows = (
             sum(
                 max(sdig.get(mb, (0, 0, 0))[0], tdig.get(mb, (0, 0, 0))[0])
@@ -206,22 +192,23 @@ def sync_replica(
             if dirty is not None and tdig is not None
             else None
         )
-        if (
-            est_rows is not None
-            and est_rows <= _trickle_sync_max_rows()
-            and _sess.trickle_allowed()
-        ):
-            with _sess.trickle_scope(spark):
-                return _merge_replica(
-                    spark, src, source_path, target_path, key_cols,
-                    tgt_layout, tgt_exists, delete_missing, num_buckets,
-                    sdig, tdig,
-                )
-        with _sess.corpus_section():
-            return _merge_replica(
-                spark, src, source_path, target_path, key_cols, tgt_layout,
-                tgt_exists, delete_missing, num_buckets, sdig, tdig,
-            )
+        if est_rows is not None and est_rows <= _trickle_sync_max_rows():
+            from presencia_etl_spark.session import trickle_session
+
+            spark = trickle_session(spark)
+        # Strip the source's PER-REPLICA surrogates: its bucket column
+        # reflects ITS layout/modulus (a flat target must not inherit
+        # one), and its audit identity (id/created_at/updated_at)
+        # belongs to that replica — the target keeps/assigns its own.
+        # row_hash stays: it is data-only and trusted, so the merge
+        # never re-hashes the source.
+        src = read_managed_pruned(spark, source_path, dirty).drop(
+            "_kb", "id", "created_at", "updated_at"
+        )
+        return _merge_replica(
+            spark, src, source_path, target_path, key_cols, tgt_layout,
+            tgt_exists, delete_missing, num_buckets, sdig, tdig,
+        )
 
 
 def _trickle_sync_max_rows() -> int:
@@ -372,33 +359,27 @@ def replicate_changes(
         spark.sparkContext.setLogLevel("ERROR")
     from pyspark.sql.functions import col as F_col
 
-    from presencia_etl_spark import session as _sess
+    from presencia_etl_spark.session import trickle_session
     from presencia_etl_spark.sinks.mor import DELETED_COL, SEQ_COL
 
-    def _apply() -> dict:
-        feed = read_mor_changes(
-            spark, source_path, since_seq=cursor, as_of_seq=hist["seq"]
-        )
-        # Per-replica surrogates are the target's business (the
-        # sync_replica discipline); row_hash stays so nothing re-hashes.
-        drop = [SEQ_COL, DELETED_COL, "_kb", "id", "created_at", "updated_at"]
-        ups = feed.filter(~F_col(DELETED_COL)).drop(*drop)
-        dels = feed.filter(F_col(DELETED_COL)).select(*key_cols)
-        r = merge_upsert_mor(
-            spark, ups, target_path, key_cols,
-            num_buckets=num_buckets or _num_buckets_of(source_path) or 256,
-            digest_prune=False,
-            delete_keys=dels,
-        )
-        _write_replicate_cursor(target_path, hist["seq"])
-        return {**r, "mode": "feed", "src_seq": hist["seq"]}
-
-    pending = delta_bytes_in_range(source_path, cursor, hist["seq"])
-    if pending <= (16 << 20) and _sess.trickle_allowed():
-        with _sess.trickle_scope(spark):
-            return _apply()
-    with _sess.corpus_section():
-        return _apply()
+    if delta_bytes_in_range(source_path, cursor, hist["seq"]) <= (16 << 20):
+        spark = trickle_session(spark)
+    feed = read_mor_changes(
+        spark, source_path, since_seq=cursor, as_of_seq=hist["seq"]
+    )
+    # Per-replica surrogates are the target's business (the
+    # sync_replica discipline); row_hash stays so nothing re-hashes.
+    drop = [SEQ_COL, DELETED_COL, "_kb", "id", "created_at", "updated_at"]
+    ups = feed.filter(~F_col(DELETED_COL)).drop(*drop)
+    dels = feed.filter(F_col(DELETED_COL)).select(*key_cols)
+    r = merge_upsert_mor(
+        spark, ups, target_path, key_cols,
+        num_buckets=num_buckets or _num_buckets_of(source_path) or 256,
+        digest_prune=False,
+        delete_keys=dels,
+    )
+    _write_replicate_cursor(target_path, hist["seq"])
+    return {**r, "mode": "feed", "src_seq": hist["seq"]}
 
 
 def _green_result(skip: int, tgt_layout: str) -> dict:

@@ -16,8 +16,9 @@ Defaults chosen for correctness-at-scale first:
 from __future__ import annotations
 
 import os
+import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _cgroup_limit_kb() -> int | None:
@@ -140,240 +141,78 @@ def get_spark(
     return builder.getOrCreate()
 
 
-import contextlib
-import threading
-
-# Session conf is process-global, so the two conf regimes exclude each
-# other like a readers-writer lock:
-# - trickle_scope is the WRITER: it flips AQE/shuffle-width for the
-#   duration of one KB-sized batch. One at a time (interleaved restores
-#   would corrupt each other), re-entrant on the owning thread.
-# - corpus_section is the READER: corpus-scale work (a table-sync
-#   fan-out, an ad-hoc SQL statement, a multi-GB agg fold) holds it for
-#   its WHOLE duration so no trickle scope can flip the conf mid-run —
-#   not merely at dispatch time. Readers share freely.
-# Illegal nestings raise loudly instead of deadlocking: a corpus section
-# from inside this thread's own scope, a scope from inside this thread's
-# own corpus section, or a scope from inside a ``run_per_table`` WORKER
-# (the dispatcher holds the reader for the whole fan-out, so a worker's
-# scope would wait on its own dispatcher forever — the thread-local
-# corpus-work marker turns that cross-thread deadlock into an error).
-# Fairness: a WAITING writer blocks NEW readers (re-entrant holders pass),
-# so back-to-back corpus sections can't starve the trickle loops; writers
-# themselves hold the conf for one KB-sized batch only.
-_CONF_COND = threading.Condition()
-_WRITER: int | None = None
-_WRITER_DEPTH = 0
-_WRITERS_WAITING = 0
-_READERS: dict[int, int] = {}  # thread ident -> reentrancy depth
-_CORPUS_WORK = threading.local()  # .depth > 0 inside a fan-out work fn
+# The conf a trickle plan runs with. Trickle plans are the steady-state
+# loops (the admit loop, an incremental refresh) whose every frame is
+# KB-sized and whose join strategy is decided statically (broadcast
+# hints, In-pushdown). Three session knobs cost such plans more than
+# they buy:
+# - AQE launches a separate Spark job per exchange it re-plans (~0.1 s
+#   fixed latency each, ~10 per admit batch measured) for decisions the
+#   plan already made;
+# - a LIMIT collect ramps over several jobs (1 partition, then 4x...);
+#   scanning everything in one job is cheaper when 'everything' is one
+#   small batch;
+# - the session shuffle width launches more tasks than there are rows
+#   to shuffle.
+TRICKLE_CONF = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.limit.initialNumPartitions": "100000",
+    "spark.sql.shuffle.partitions": "8",
+}
+# Guards the cached child and its mirror bookkeeping; no query runs under it.
+_TRICKLE_LOCK = threading.Lock()
 
 
-@contextlib.contextmanager
-def corpus_work_marker():
-    """Mark this thread as executing a work unit on behalf of an open
-    ``corpus_section`` on ANOTHER thread (``run_per_table`` wraps every
-    worker call in this). ``trickle_scope`` refuses to open under the
-    marker — the dispatcher's reader token would deadlock it.
+def trickle_session(spark: SparkSession) -> SparkSession:
+    """The session to root TRICKLE plans in: one cached child of
+    ``spark`` (``spark.newSession()`` — same SparkContext, table cache
+    and JVM, its own SQL conf) with ``TRICKLE_CONF`` set once.
 
-    The marker is THREAD-LOCAL and does not inherit: a work function
-    that spawns its own sub-threads (docs list thread fan-out as
-    corpus-scale work) leaves them unmarked, and a ``corpus_section``
-    there re-creates the dispatcher→worker→writer three-way deadlock as
-    a silent hang. Wrap every sub-thread target in
-    ``propagate_corpus_marker`` (captures this thread's marker at wrap
-    time, re-applies it in the child) before handing it to
-    ``threading.Thread`` / an executor."""
-    _CORPUS_WORK.depth = getattr(_CORPUS_WORK, "depth", 0) + 1
-    try:
-        yield
-    finally:
-        _CORPUS_WORK.depth -= 1
+    SQL conf is per session, so a trickle plan never changes what a
+    ``spark``-rooted query sees, on any thread, and corpus work needs no
+    guard; a trickle plan may run anywhere, a ``run_per_table`` worker
+    included. A plan runs under the conf of the session its frames were
+    built in (a join takes its left input's), so a trickle plan builds
+    every read from the returned session; ``in_session`` moves a frame
+    built elsewhere.
 
-
-def propagate_corpus_marker(fn):
-    """Wrap ``fn`` for execution on a SUB-THREAD spawned from a thread
-    that may carry the corpus-work marker. Thread-locals don't inherit,
-    so without this a sub-thread spawned inside a ``run_per_table`` work
-    function is unmarked: its ``corpus_section`` would yield to a
-    waiting ``trickle_scope`` whose writer is itself queued behind the
-    dispatcher's reader — a silent three-way hang instead of the loud
-    error the marker exists for. Captures the SPAWNING thread's marker
-    state at wrap time; a no-op wrapper when the spawner is unmarked, so
-    it is always safe to apply."""
-    import functools
-
-    inherited = getattr(_CORPUS_WORK, "depth", 0) > 0
-
-    @functools.wraps(fn)
-    def _wrapped(*args, **kwargs):
-        if not inherited:
-            return fn(*args, **kwargs)
-        with corpus_work_marker():
-            return fn(*args, **kwargs)
-
-    return _wrapped
+    The child does not inherit runtime ``spark.conf.set`` values, so
+    every call mirrors the parent's runtime SQL conf into it, the three
+    trickle knobs excepted. One JVM ``equals`` per call detects a change;
+    only then are the entries compared and the differing ones set.
+    Called on a trickle session, returns it."""
+    if getattr(spark, "_trickle_parent", None) is not None:
+        return spark
+    with _TRICKLE_LOCK:
+        child = getattr(spark, "_trickle_child", None)
+        if child is None:
+            child = spark.newSession()
+            for k, v in TRICKLE_CONF.items():
+                child.conf.set(k, v)
+            child._trickle_parent = spark
+            child._mirrored = (None, child.conf.getAll)
+            spark._trickle_child = child
+        jnow = spark.conf._jconf.getAllAsJava()
+        jseen, seen = child._mirrored
+        if jseen is None or not jnow.equals(jseen):
+            now = dict(jnow)
+            for k in seen.keys() - now.keys() - TRICKLE_CONF.keys():
+                child.conf.unset(k)
+            for k, v in now.items():
+                if k not in TRICKLE_CONF and seen.get(k) != v:
+                    child.conf.set(k, v)
+            child._mirrored = (jnow, now)
+    return child
 
 
-@contextlib.contextmanager
-def corpus_section():
-    """Hold the shared side of the conf lock for the duration of
-    corpus-scale work that must see SESSION defaults throughout
-    (``run_per_table`` fan-out, ``run_sql``, a corpus-sized incremental
-    fold). Waits out any open ``trickle_scope`` on another thread;
-    raises if entered from inside this thread's own scope (the work
-    would silently run with AQE off and 8 shuffle partitions)."""
-    me = threading.get_ident()
-    with _CONF_COND:
-        if _WRITER == me:
-            raise RuntimeError(
-                "corpus-scale dispatch inside an open trickle_scope: the "
-                "work would run under trickle conf (AQE off, 8 shuffle "
-                "partitions); close the scope first."
-            )
-        # New readers also yield to a WAITING writer (fairness); a thread
-        # already holding a reader token re-enters freely (no writer can
-        # be active while any reader holds). A ``run_per_table`` WORKER
-        # (corpus-work marker set) inherits its dispatcher's guarantee the
-        # same way: the dispatcher holds a reader for the whole fan-out,
-        # so no writer can be active — and the worker must NOT yield to a
-        # waiting writer, or dispatcher→worker→writer→dispatcher becomes
-        # a three-way deadlock (the dispatcher waits on the worker, the
-        # writer waits on the dispatcher's reader, the worker waits on
-        # the writer's fairness gate).
-        # (The marker skips only the FAIRNESS yield, not the active-writer
-        # wait: with the dispatcher's reader held no writer can be active
-        # anyway, and if the marker is ever misused without one, waiting
-        # out a live scope is still correct — only the yield deadlocks.)
-        while me not in _READERS and (
-            _WRITER is not None
-            or (_WRITERS_WAITING > 0 and getattr(_CORPUS_WORK, "depth", 0) == 0)
-        ):
-            _CONF_COND.wait()
-        _READERS[me] = _READERS.get(me, 0) + 1
-    try:
-        yield
-    finally:
-        with _CONF_COND:
-            _READERS[me] -= 1
-            if _READERS[me] == 0:
-                del _READERS[me]
-            _CONF_COND.notify_all()
-
-
-def corpus_barrier() -> None:
-    """Point-in-time form of ``corpus_section``: wait for any open scope
-    to close, then proceed unguarded. Kept for dispatch points that
-    cannot bracket their whole duration; prefer ``corpus_section``."""
-    with corpus_section():
-        pass
-
-
-def trickle_allowed() -> bool:
-    """True when THIS thread may open a ``trickle_scope`` without
-    raising: not inside its own ``corpus_section`` and not marked as a
-    corpus work unit (a ``run_per_table`` worker). Operators that
-    decide trickle-vs-corpus from metadata use this to degrade to
-    session conf instead of erroring when composed under a fan-out —
-    the conf win is forfeited there, never correctness."""
-    return (
-        threading.get_ident() not in _READERS
-        and getattr(_CORPUS_WORK, "depth", 0) == 0
+def in_session(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """``df``'s logical plan as a frame of ``spark``: planned and run
+    under ``spark``'s conf from here on. The cache manager is shared by
+    every session of one SparkContext, so a persisted frame moved this
+    way still reads its cache. ``Dataset.ofRows`` is a JVM-internal
+    entry point; ``tests/test_session.py`` pins that it still moves a
+    frame."""
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.logicalPlan()
     )
-
-
-@contextlib.contextmanager
-def trickle_scope(spark: SparkSession):
-    """Conf scope for TRICKLE-BATCH plans — the steady-state loops (the
-    admit loop, an incremental-agg refresh) whose every frame is KB-sized
-    and whose join strategy is fully decided statically (broadcast hints,
-    In-pushdown). Three session knobs cost such plans more than they buy:
-
-    - AQE launches a separate Spark job per exchange it re-plans (~0.1 s
-      fixed latency each, ~10 per admit batch measured) for decisions the
-      plan already made.
-    - A LIMIT collect ramps over several jobs (1 partition, then 4x...);
-      scanning everything in one job is cheaper when 'everything' is one
-      small batch.
-    - The session shuffle width launches more tasks than there are rows
-      to shuffle.
-
-    Corpus-scale one-shot shapes (LSH sweep, compaction, full loads) keep
-    the session defaults. Restores every knob on exit; actions on frames
-    RETURNED out of the scope run under the session config again.
-
-    Scopes SERIALIZE and EXCLUDE corpus sections (writer side of the
-    module's conf lock): session conf is process-global, so interleaved
-    enter/exit from two threads would corrupt the restore, and a scope
-    opening mid-way through a corpus-scale run on another thread would
-    silently throttle it to AQE-off/8-partition conf. Entering a scope
-    waits for open ``corpus_section``s to drain (and vice versa); an
-    unrelated UNGUARDED query on another thread during a scope still
-    sees trickle conf — wrap such work in ``corpus_section``, or give a
-    true multi-tenant session per-query conf (Spark Connect) or a
-    dedicated session. Raises (instead of deadlocking) when entered
-    inside this thread's own corpus section."""
-    global _WRITER, _WRITER_DEPTH, _WRITERS_WAITING
-    me = threading.get_ident()
-    with _CONF_COND:
-        if me in _READERS:
-            raise RuntimeError(
-                "trickle_scope inside this thread's own corpus_section: "
-                "the corpus work would continue under trickle conf; "
-                "restructure so the scope is not nested in the section."
-            )
-        if getattr(_CORPUS_WORK, "depth", 0) > 0:
-            raise RuntimeError(
-                "trickle_scope inside a run_per_table work function: the "
-                "dispatcher holds the corpus_section reader for the whole "
-                "fan-out, so this scope would deadlock against its own "
-                "dispatcher. Run trickle-scoped operators outside the "
-                "fan-out."
-            )
-        _WRITERS_WAITING += 1
-        try:
-            while _READERS or (_WRITER is not None and _WRITER != me):
-                _CONF_COND.wait()
-        except BaseException:
-            _WRITERS_WAITING -= 1
-            _CONF_COND.notify_all()  # unblock readers yielding to us
-            raise
-        _WRITERS_WAITING -= 1
-        _WRITER = me
-        _WRITER_DEPTH += 1
-    # EVERYTHING after the acquire sits inside this try: a py4j hiccup in
-    # the entry-side conf reads/sets (stopped session, transient gateway
-    # error) must still release the lock, or every later trickle path in
-    # the process would block forever. `restore` records exactly the
-    # knobs that were successfully changed, so a partial entry restores
-    # partially instead of writing stale values.
-    try:
-        restore = []
-        old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        restore.append(("spark.sql.adaptive.enabled", old_aqe))
-        # Set the limit-ramp knob ONLY if reading it succeeded: on a Spark
-        # where the conf key doesn't exist the get raises, and an
-        # unconditional set would install a value the restore loop never
-        # removes (it would survive scope exit).
-        try:
-            old_lim = spark.conf.get("spark.sql.limit.initialNumPartitions")
-        except Exception:
-            old_lim = None
-        if old_lim is not None:
-            spark.conf.set("spark.sql.limit.initialNumPartitions", "100000")
-            restore.append(("spark.sql.limit.initialNumPartitions", old_lim))
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        restore.append(("spark.sql.shuffle.partitions", old_sp))
-        try:
-            yield
-        finally:
-            for k, v in restore:
-                spark.conf.set(k, v)
-    finally:
-        with _CONF_COND:
-            _WRITER_DEPTH -= 1
-            if _WRITER_DEPTH == 0:
-                _WRITER = None
-            _CONF_COND.notify_all()
+    return DataFrame(jdf, spark)

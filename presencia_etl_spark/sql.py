@@ -303,26 +303,17 @@ def run_sql(
     {'views', 'columns', 'rows', 'truncated'}; rows are capped at
     ``limit`` (the driver materializes them). ``generation`` pins MOR
     views to a recorded sync run, exactly as ``register_state_views``."""
-    # Ad-hoc SQL is corpus-scale work: hold the shared side of the conf
-    # lock for the statement's whole execution so no trickle_scope (AQE
-    # off, 8 shuffle partitions) flips the conf mid-query on another
-    # thread; raises if called from inside one.
-    from presencia_etl_spark.session import corpus_section
-
-    with corpus_section():
-        stmt = (statement or "").strip().rstrip(";")
-        _assert_read_only(spark, stmt)
-        views = register_state_views(
-            spark,
-            warehouse_root,
-            include_internal=include_internal,
-            prefix=prefix,
-            generation=generation,
-        )
-        df = spark.sql(stmt)
-        rows = [
-            r.asDict(recursive=True) for r in df.limit(limit + 1).collect()
-        ]
+    stmt = (statement or "").strip().rstrip(";")
+    _assert_read_only(spark, stmt)
+    views = register_state_views(
+        spark,
+        warehouse_root,
+        include_internal=include_internal,
+        prefix=prefix,
+        generation=generation,
+    )
+    df = spark.sql(stmt)
+    rows = [r.asDict(recursive=True) for r in df.limit(limit + 1).collect()]
     return {
         "views": views,
         "columns": list(df.columns),

@@ -503,6 +503,34 @@ class TestTrickleJobBudget:
         jobs = j1 - j0 - 1  # the count() above is ours, not the loop's
         assert jobs <= 14, f"trickle admit used {jobs} Spark jobs"
 
+    def test_trickle_admit_runs_in_trickle_session(
+        self, spark, tmp_path, sql_plans
+    ):
+        """The combined signature collect, the probe and the admitted
+        checkpoint of a trickle batch all plan in the trickle session
+        (no adaptive plan outside the batch's caches, which the caller's
+        session built); the admitted frame is handed back in ``spark``."""
+        from presencia_etl_spark.operators import dedup_index
+
+        idx = str(tmp_path / "idx")
+        hist = spark.createDataFrame(
+            [(i, f"historical document number {i} some words") for i in range(30)],
+            ["doc_id", "text"],
+        )
+        dedup_index.build_minhash_index(spark, hist, "doc_id", "text", idx)
+        batch = spark.createDataFrame(
+            [(600, "fresh text that matches nothing else"),
+             (601, "historical document number 3 some words")],
+            ["doc_id", "text"],
+        )
+        admitted, trees = sql_plans(
+            lambda: dedup_index.admit_batch(spark, batch, "doc_id", "text", idx)
+        )
+        assert len(trees) >= 3
+        assert not any("AdaptiveSparkPlan" in t for t in trees), trees
+        assert admitted.sparkSession is spark
+        assert sorted(r["doc_id"] for r in admitted.collect()) == [600]
+
 
 class TestTrickleAppendDurability:
     def test_compaction_after_driver_appends(self, spark, tmp_path):

@@ -110,16 +110,16 @@ class TestIncrementalAgg:
         assert r["changed_rows"] <= 50
         _assert_matches_recompute(spark, mor_t, agg_t)
 
-    def test_corpus_sized_refresh_skips_trickle_scope(
-        self, spark, tmp_path, monkeypatch
+    def test_corpus_sized_refresh_runs_in_parent_session(
+        self, spark, tmp_path, monkeypatch, sql_plans
     ):
         """A refresh whose pending delta files exceed the trickle byte
-        bound must run under SESSION defaults — no trickle_scope entry
-        (AQE off + 8 static shuffle partitions would plan a
-        millions-of-rows fold badly AND hold the process-global scope
-        mutex for its duration) — and still match a full recompute. The
-        trickle decision comes from fs metadata, so it is forced here by
-        shrinking the bound rather than writing GBs."""
+        bound must run in the CALLER's session with its defaults (AQE
+        off + 8 static shuffle partitions would plan a millions-of-rows
+        fold badly) and still match a full recompute; one below the
+        bound runs in the trickle session, and no plan it executes is
+        adaptive. The trickle decision comes from fs metadata, so it is
+        forced here by shrinking the bound rather than writing GBs."""
         from presencia_etl_spark import session as sess
 
         rng = random.Random(23)
@@ -133,35 +133,34 @@ class TestIncrementalAgg:
             spark, _df(spark, _rows(rng, range(250, 350))), mor_t, ["K"],
             num_buckets=8, compact_every=None,
         )
-        entered = []
-        real_scope = sess.trickle_scope
-        import contextlib
+        sessions = []
+        real_inner = ia._refresh_agg_snapshot_inner
 
-        @contextlib.contextmanager
-        def spying_scope(s):
-            entered.append(True)
-            with real_scope(s):
-                yield
+        def spying_inner(s, *a, **kw):
+            sessions.append(s)
+            return real_inner(s, *a, **kw)
 
-        monkeypatch.setattr(sess, "trickle_scope", spying_scope)
-        # Above the bound: corpus path, scope never entered.
+        monkeypatch.setattr(ia, "_refresh_agg_snapshot_inner", spying_inner)
+        # Above the bound: corpus path, the caller's session.
         monkeypatch.setattr(ia, "TRICKLE_DELTA_MAX_BYTES", -1)
-        r = ia.refresh_agg_snapshot(spark, mor_t, agg_t)
+        r, trees = sql_plans(lambda: ia.refresh_agg_snapshot(spark, mor_t, agg_t))
         assert r["mode"] == "incremental" and r["changed_rows"] > 0
-        assert entered == []
+        assert sessions == [spark]
+        assert any("AdaptiveSparkPlan" in t for t in trees)
         _assert_matches_recompute(spark, mor_t, agg_t)
-        # Below the bound: trickle path, scope entered. The zero-job
-        # driver fold would normally absorb a batch this small — kill
-        # it so THIS pin keeps covering the Spark trickle conf layer.
+        # Below the bound: trickle path, the trickle session. The
+        # zero-job driver fold would normally absorb a batch this small
+        # — kill it so THIS pin keeps covering the Spark trickle layer.
         monkeypatch.setenv("SPARK_GRAFT_DRIVER_TRICKLE", "0")
         monkeypatch.setattr(ia, "TRICKLE_DELTA_MAX_BYTES", 16 << 20)
         mor.merge_upsert_mor(
             spark, _df(spark, _rows(rng, range(340, 360))), mor_t, ["K"],
             num_buckets=8, compact_every=None,
         )
-        r = ia.refresh_agg_snapshot(spark, mor_t, agg_t)
+        r, trees = sql_plans(lambda: ia.refresh_agg_snapshot(spark, mor_t, agg_t))
         assert r["mode"] == "incremental"
-        assert entered == [True]
+        assert sessions == [spark, sess.trickle_session(spark)]
+        assert trees and not any("AdaptiveSparkPlan" in t for t in trees)
         _assert_matches_recompute(spark, mor_t, agg_t)
 
     def test_noop_refresh(self, spark, tmp_path):

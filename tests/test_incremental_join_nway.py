@@ -578,6 +578,35 @@ class TestNwayLeftStar:
         assert n_jobs <= 6, f"hybrid dim sweep ran {n_jobs} jobs"
         self._assert_left_matches(spark, v, a, b, c)
 
+    def test_dim_tick_probe_runs_in_trickle_session(
+        self, spark, tmp_path, monkeypatch, sql_plans
+    ):
+        """The hybrid dim sweep's affected-fact probe is read in the
+        trickle session, and no plan the refresh executes is adaptive."""
+        from presencia_etl_spark.session import trickle_session
+
+        rng = random.Random(509)
+        a, b, c = self._seed_left(spark, tmp_path, rng)
+        v = self._build_left(spark, tmp_path, a, b, c, "lview_tss")
+        mor.merge_upsert_mor(
+            spark, spark.createDataFrame([("d1", "renamed")], D_SCHEMA),
+            b, ["d_id"], compact_every=None,
+        )
+        sessions = []
+        real_read = nw.read_mor
+
+        def spying_read(s, *args, **kw):
+            sessions.append(s)
+            return real_read(s, *args, **kw)
+
+        monkeypatch.setattr(nw, "read_mor", spying_read)
+        r, trees = sql_plans(lambda: ij.refresh_join_view(spark, v))
+        monkeypatch.undo()
+        assert r["mode"] == "incremental" and r.get("path") == "driver"
+        assert sessions == [trickle_session(spark)]
+        assert trees and not any("AdaptiveSparkPlan" in t for t in trees)
+        self._assert_left_matches(spark, v, a, b, c)
+
     def test_dim_tick_duplicate_fact_keys_decline_early(
         self, spark, tmp_path
     ):

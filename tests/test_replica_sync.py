@@ -176,14 +176,18 @@ class TestSparseDivergence:
             read_managed(spark, src_t)
         )
 
-    def test_sync_composes_under_corpus_fanout_marker(
-        self, spark, tmp_path
+    def test_trickle_sync_inside_run_per_table_worker(
+        self, spark, tmp_path, monkeypatch
     ):
-        """A sparse sync called from a run_per_table-style worker
-        (corpus-work marker set) must DEGRADE to session conf, not
-        raise from trickle_scope — the conf win is forfeited, never
-        correctness or composability."""
-        from presencia_etl_spark.session import corpus_work_marker
+        """A sparse sync called from a ``run_per_table`` worker takes the
+        trickle session like any other caller and returns the same
+        counts and state."""
+        from presencia_etl_spark import session as sess
+        from presencia_etl_spark.plans import replica_sync as rs
+        from presencia_etl_spark.plans.full_sync import (
+            TableConfig,
+            run_per_table,
+        )
 
         src_t = str(tmp_path / "src")
         tgt_t = str(tmp_path / "tgt")
@@ -195,9 +199,24 @@ class TestSparseDivergence:
             _docs(spark, 150, extra_mod=149).filter(F.col("K") == "149"),
             src_t, ["K"], num_buckets=8, compact_every=None,
         )
-        with corpus_work_marker():
-            r = sync_replica(spark, src_t, tgt_t, ["K"])
-        assert r["update"] == 1
+        sessions = []
+        real_merge = rs._merge_replica
+
+        def spying_merge(s, *a, **kw):
+            sessions.append(s)
+            return real_merge(s, *a, **kw)
+
+        monkeypatch.setattr(rs, "_merge_replica", spying_merge)
+        # Two tables, so the work runs on the fan-out's pool threads.
+        out = run_per_table(
+            {n: TableConfig(name=n) for n in ("t", "idle")},
+            {"t": None, "idle": None},
+            lambda n, _c: (
+                sync_replica(spark, src_t, tgt_t, ["K"]) if n == "t" else None
+            ),
+        )
+        assert out["t"]["update"] == 1
+        assert sessions == [sess.trickle_session(spark)]
         assert _state(read_managed(spark, tgt_t)) == _state(
             read_managed(spark, src_t)
         )

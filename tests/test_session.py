@@ -1,400 +1,179 @@
-"""trickle_scope / corpus_barrier conf-scope discipline — driver-only
-tests over a stubbed conf (no Spark jobs): partial-entry restore, the
-missing-conf-key guard, and the corpus-dispatch overlap barrier."""
+"""The trickle session (``session.trickle_session``): a cached child of
+the caller's session that carries the trickle conf, so trickle plans and
+corpus work never see each other's conf on any thread; plus the
+local-mode heap sizing of the session factory."""
 
 from __future__ import annotations
 
 import threading
-import time
 
-import pytest
+from pyspark.sql import functions as F
 
 from presencia_etl_spark import session as sess
 
-
-class FakeConf:
-    """Records every set; raises on get of the keys in ``missing``."""
-
-    def __init__(self, values: dict[str, str], missing: set[str] = frozenset()):
-        self.values = dict(values)
-        self.missing = set(missing)
-        self.set_log: list[tuple[str, str]] = []
-
-    def get(self, key, default=None):
-        if key in self.missing:
-            raise Exception(f"conf {key} not registered")
-        if key in self.values:
-            return self.values[key]
-        if default is not None:
-            return default
-        raise Exception(f"no value for {key}")
-
-    def set(self, key, value):
-        self.set_log.append((key, str(value)))
-        self.values[key] = str(value)
+KNOBS = tuple(sess.TRICKLE_CONF)
 
 
-class FakeSpark:
-    def __init__(self, conf: FakeConf):
-        self.conf = conf
+def _grouped(s):
+    return s.range(2000, numPartitions=2).groupBy(
+        (F.col("id") % 7).alias("k")
+    ).count()
 
 
-BASE = {
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.shuffle.partitions": "32",
-    "spark.sql.limit.initialNumPartitions": "200",
-}
+def _root(df) -> str:
+    return df._jdf.queryExecution().executedPlan().nodeName()
 
 
-class TestTrickleScope:
-    def test_every_knob_restored_on_exit(self):
-        spark = FakeSpark(FakeConf(BASE))
-        with sess.trickle_scope(spark):
-            assert spark.conf.values["spark.sql.adaptive.enabled"] == "false"
-            assert spark.conf.values["spark.sql.shuffle.partitions"] == "8"
-            assert (
-                spark.conf.values["spark.sql.limit.initialNumPartitions"]
-                == "100000"
+class TestTrickleSession:
+    def test_one_cached_child_with_trickle_conf(self, spark):
+        ts = sess.trickle_session(spark)
+        assert ts is not spark
+        assert ts.sparkContext is spark.sparkContext
+        assert sess.trickle_session(spark) is ts
+        assert sess.trickle_session(ts) is ts
+        for k, v in sess.TRICKLE_CONF.items():
+            assert ts.conf.get(k) == v
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+    def test_parent_runtime_conf_reaches_child_and_knobs_stay_put(self, spark):
+        """A runtime ``spark.conf.set`` on the parent (and its unset)
+        reaches the trickle session; a parent-side value of a trickle
+        knob does not, and no trickle knob leaks back to the parent."""
+        key = "spark.sql.files.openCostInBytes"
+        parent_knobs = {k: spark.conf.get(k) for k in KNOBS}
+        ts = sess.trickle_session(spark)  # exists before the parent changes
+        try:
+            spark.conf.set(key, "4194305")
+            spark.conf.set("spark.sql.shuffle.partitions", "13")
+            ts = sess.trickle_session(spark)
+            assert ts.conf.get(key) == "4194305"
+            assert ts.conf.get("spark.sql.shuffle.partitions") == "8"
+            spark.conf.unset(key)
+            assert sess.trickle_session(spark).conf.get(key) == spark.conf.get(key)
+        finally:
+            spark.conf.unset(key)
+            spark.conf.set(
+                "spark.sql.shuffle.partitions",
+                parent_knobs["spark.sql.shuffle.partitions"],
             )
-        assert spark.conf.values == BASE
+        _grouped(ts).collect()
+        assert {k: spark.conf.get(k) for k in KNOBS} == parent_knobs
+        assert ts.conf.get("spark.sql.shuffle.partitions") == "8"
 
-    def test_missing_limit_conf_is_never_set(self):
-        """If reading spark.sql.limit.initialNumPartitions raises (the
-        conf key doesn't exist on some Spark), the scope must NOT set it —
-        an unconditional set would install a value the restore loop never
-        removes, surviving scope exit."""
-        conf = FakeConf(
-            {k: v for k, v in BASE.items() if "initialNumPartitions" not in k},
-            missing={"spark.sql.limit.initialNumPartitions"},
+    def test_parent_query_keeps_aqe_while_trickle_plan_runs(self, spark):
+        """While a trickle plan runs on one thread, a parent-session
+        query planned on another still gets AQE and the session width —
+        the hazard a process-global conf flip had for unguarded work."""
+        width = spark.conf.get("spark.sql.shuffle.partitions")
+        ts = sess.trickle_session(spark)
+        done = threading.Event()
+        errors: list[BaseException] = []
+
+        def trickle():
+            try:
+                for _ in range(3):
+                    assert _root(_grouped(ts)) != "AdaptiveSparkPlan"
+                    _grouped(ts).collect()
+            except BaseException as e:
+                errors.append(e)
+            finally:
+                done.set()
+
+        t = threading.Thread(target=trickle)
+        t.start()
+        checks = 0
+        while not done.is_set() or checks == 0:
+            assert _root(_grouped(spark)) == "AdaptiveSparkPlan"
+            assert spark.conf.get("spark.sql.shuffle.partitions") == width
+            checks += 1
+        t.join(60)
+        assert not t.is_alive() and not errors, errors
+
+    def test_trickle_plan_inside_run_per_table_worker(self, spark):
+        """Corpus fan-out needs no guard: ``run_per_table`` workers may
+        run trickle plans, concurrently, next to parent-session work."""
+        from presencia_etl_spark.plans.full_sync import (
+            TableConfig,
+            run_per_table,
         )
-        spark = FakeSpark(conf)
-        with sess.trickle_scope(spark):
-            pass
-        assert all(
-            "initialNumPartitions" not in k for k, _ in conf.set_log
-        ), f"limit knob was set despite unreadable conf: {conf.set_log}"
-        assert spark.conf.values == {
-            k: v for k, v in BASE.items() if "initialNumPartitions" not in k
-        }
 
-    def test_restore_runs_when_body_raises(self):
-        spark = FakeSpark(FakeConf(BASE))
-        with pytest.raises(RuntimeError):
-            with sess.trickle_scope(spark):
-                raise RuntimeError("boom")
-        assert spark.conf.values == BASE
-        # The scope bookkeeping is cleared: a later barrier passes.
-        sess.corpus_barrier()
+        cfgs = {f"t{i}": TableConfig(name=f"t{i}") for i in range(3)}
 
-
-class TestCorpusBarrier:
-    def test_raises_inside_own_scope(self):
-        spark = FakeSpark(FakeConf(BASE))
-        with sess.trickle_scope(spark):
-            with pytest.raises(RuntimeError, match="trickle_scope"):
-                sess.corpus_barrier()
-        sess.corpus_barrier()  # fine once the scope closed
-
-    def test_run_per_table_refuses_dispatch_inside_scope(self):
-        from presencia_etl_spark.plans.full_sync import run_per_table
-
-        spark = FakeSpark(FakeConf(BASE))
-        with sess.trickle_scope(spark):
-            with pytest.raises(RuntimeError, match="trickle_scope"):
-                run_per_table({}, {}, lambda n, c: None)
-
-    def test_corpus_section_excludes_scope_for_its_whole_duration(self):
-        """A trickle_scope attempted DURING an open corpus_section blocks
-        until the section exits — corpus work sees session conf
-        throughout, not merely at dispatch time."""
-        spark = FakeSpark(FakeConf(BASE))
-        in_section = threading.Event()
-        release = threading.Event()
-
-        def holder():
-            with sess.corpus_section():
-                in_section.set()
-                release.wait(10)
-
-        t = threading.Thread(target=holder)
-        t.start()
-        assert in_section.wait(10)
-        scope_entered = threading.Event()
-
-        def writer():
-            with sess.trickle_scope(spark):
-                scope_entered.set()
-
-        w = threading.Thread(target=writer)
-        w.start()
-        time.sleep(0.2)
-        assert not scope_entered.is_set()  # blocked behind the section
-        release.set()
-        t.join(10)
-        assert scope_entered.wait(10)
-        w.join(10)
-        assert spark.conf.values == BASE
-
-    def test_two_corpus_sections_share(self):
-        order = []
-
-        def reader(name, gate):
-            with sess.corpus_section():
-                order.append(name)
-                gate.wait(10)
-
-        g = threading.Event()
-        ts = [
-            threading.Thread(target=reader, args=(i, g)) for i in range(2)
-        ]
-        for t in ts:
-            t.start()
-        deadline = time.time() + 5
-        while len(order) < 2 and time.time() < deadline:
-            time.sleep(0.01)
-        assert len(order) == 2  # both entered concurrently
-        g.set()
-        for t in ts:
-            t.join(10)
-
-    def test_scope_inside_own_corpus_section_raises(self):
-        spark = FakeSpark(FakeConf(BASE))
-        with sess.corpus_section():
-            with pytest.raises(RuntimeError, match="corpus_section"):
-                with sess.trickle_scope(spark):
-                    pass
-
-    def test_scope_inside_corpus_work_marker_raises(self):
-        """A trickle_scope attempted inside a fan-out work unit raises
-        loudly — the dispatcher holds the section's reader token, so
-        waiting would deadlock against it forever."""
-        spark = FakeSpark(FakeConf(BASE))
-        with sess.corpus_work_marker():
-            with pytest.raises(RuntimeError, match="run_per_table"):
-                with sess.trickle_scope(spark):
-                    pass
-        with sess.trickle_scope(spark):  # fine once the marker is gone
-            pass
-        assert spark.conf.values == BASE
-
-    def test_run_per_table_worker_calling_scope_raises_not_deadlocks(self):
-        from presencia_etl_spark.plans.full_sync import run_per_table
-
-        spark = FakeSpark(FakeConf(BASE))
-
-        def work(name, cfg):
-            with sess.trickle_scope(spark):
-                return "unreachable"
-
-        # Two tables => pool path: the work runs on POOL threads, where
-        # only the corpus-work marker (not the same-thread reader check)
-        # can catch the would-be deadlock.
-        with pytest.raises(RuntimeError, match="run_per_table"):
-            run_per_table(
-                {"a": object(), "b": object()}, {"a": 1, "b": 2}, work,
-                max_parallel=4,
+        def work(name, _cfg):
+            ts = sess.trickle_session(spark)
+            return (
+                sorted(r["count"] for r in _grouped(ts).collect()),
+                sorted(r["count"] for r in _grouped(spark).collect()),
             )
-        # Single-table path runs on the dispatcher thread itself: the
-        # same-thread reader check fires instead — still loud.
-        with pytest.raises(RuntimeError, match="trickle_scope|corpus_section"):
-            run_per_table({"a": object()}, {"a": 1}, work, max_parallel=4)
 
-    def test_waiting_writer_blocks_new_readers(self):
-        """Fairness: while a trickle_scope is WAITING for readers to
-        drain, new corpus sections queue behind it — back-to-back corpus
-        work can't starve the steady-state trickle loops."""
-        spark = FakeSpark(FakeConf(BASE))
-        in_first = threading.Event()
-        release_first = threading.Event()
+        out = run_per_table(cfgs, dict.fromkeys(cfgs), work, max_parallel=3)
+        want = sorted(r["count"] for r in _grouped(spark).collect())
+        assert out == {n: (want, want) for n in cfgs}
 
-        def first_reader():
-            with sess.corpus_section():
-                in_first.set()
-                release_first.wait(10)
+    def test_concurrent_first_calls_share_one_child(self, spark):
+        """More threads than cores race the first ``trickle_session``
+        call of a fresh parent while it changes a runtime conf: every
+        thread gets the same child, and the child ends on the parent's
+        final value with its trickle knobs intact."""
+        import sys
 
-        r1 = threading.Thread(target=first_reader)
-        r1.start()
-        assert in_first.wait(10)
-        writer_done = threading.Event()
+        parent = spark.newSession()
+        key = "spark.sql.files.openCostInBytes"
+        got: list = []
+        errors: list[BaseException] = []
+        start = threading.Barrier(9)
 
-        def writer():
-            with sess.trickle_scope(spark):
-                pass
-            writer_done.set()
+        def racer():
+            try:
+                start.wait(10)
+                for _ in range(20):
+                    got.append(sess.trickle_session(parent))
+            except BaseException as e:
+                errors.append(e)
 
-        w = threading.Thread(target=writer)
-        w.start()
-        time.sleep(0.2)  # writer is now waiting on the open section
-        second_entered = threading.Event()
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            threads = [threading.Thread(target=racer) for _ in range(8)]
+            for t in threads:
+                t.start()
+            start.wait(10)
+            for v in range(4194305, 4194325):
+                parent.conf.set(key, str(v))
+            for t in threads:
+                t.join(60)
+        finally:
+            sys.setswitchinterval(old)
+        assert not any(t.is_alive() for t in threads) and not errors, errors
+        assert len(got) == 160 and len({id(c) for c in got}) == 1
+        child = sess.trickle_session(parent)
+        assert child is got[0]
+        assert child.conf.get(key) == "4194324"
+        for k, v in sess.TRICKLE_CONF.items():
+            assert child.conf.get(k) == v
 
-        def second_reader():
-            with sess.corpus_section():
-                second_entered.set()
-
-        r2 = threading.Thread(target=second_reader)
-        r2.start()
-        time.sleep(0.2)
-        assert not second_entered.is_set()  # queued behind the writer
-        release_first.set()
-        r1.join(10)
-        assert writer_done.wait(10)  # writer went first
-        assert second_entered.wait(10)
-        w.join(10)
-        r2.join(10)
-        assert spark.conf.values == BASE
-
-    def test_waits_out_other_threads_scope(self):
-        """A barrier on thread B blocks until thread A's open scope exits
-        — the corpus work B then launches sees restored session conf."""
-        spark = FakeSpark(FakeConf(BASE))
-        in_scope = threading.Event()
-        release = threading.Event()
-        seen_at_barrier: dict[str, str] = {}
-
-        def holder():
-            with sess.trickle_scope(spark):
-                in_scope.set()
-                release.wait(10)
-
-        t = threading.Thread(target=holder)
-        t.start()
-        assert in_scope.wait(10)
-        waiter_done = threading.Event()
-
-        def waiter():
-            sess.corpus_barrier()
-            seen_at_barrier.update(spark.conf.values)
-            waiter_done.set()
-
-        w = threading.Thread(target=waiter)
-        w.start()
-        time.sleep(0.2)
-        assert not waiter_done.is_set()  # still blocked on the open scope
-        release.set()
-        t.join(10)
-        assert waiter_done.wait(10)
-        w.join(10)
-        assert seen_at_barrier == BASE  # conf was restored before dispatch
-
-    def test_worker_corpus_section_passes_waiting_writer(self):
-        """The three-way deadlock regression: dispatcher D holds the
-        corpus reader and waits on worker W; writer T queues behind D's
-        reader; W (corpus-work marker set, i.e. executing on D's behalf)
-        opens its OWN corpus_section — e.g. run_sql / a corpus-sized agg
-        fold inside a run_per_table work function. W must pass the
-        writer-fairness gate (D's reader guarantees no writer is active),
-        or D→W→T→D hangs forever with no error."""
-        spark = FakeSpark(FakeConf(BASE))
-        in_dispatch = threading.Event()
-        worker_done = threading.Event()
-        writer_done = threading.Event()
-
-        def dispatcher():
-            with sess.corpus_section():
-                in_dispatch.set()
-                # Simulates f.result(): the dispatcher's reader stays
-                # held until the worker finishes.
-                assert worker_done.wait(10)
-
-        d = threading.Thread(target=dispatcher)
-        d.start()
-        assert in_dispatch.wait(10)
-
-        def writer():
-            with sess.trickle_scope(spark):
-                pass
-            writer_done.set()
-
-        t = threading.Thread(target=writer)
-        t.start()
-        time.sleep(0.2)  # writer is now WAITING on the dispatcher's reader
-
-        def worker():
-            with sess.corpus_work_marker():
-                with sess.corpus_section():
-                    pass
-            worker_done.set()
-
-        w = threading.Thread(target=worker)
-        w.start()
-        assert worker_done.wait(5), "worker deadlocked behind the waiting writer"
-        d.join(10)
-        assert writer_done.wait(10)  # writer still runs once readers drain
-        t.join(10)
-        w.join(10)
-        assert spark.conf.values == BASE
-
-    def test_propagated_marker_saves_sub_thread_from_deadlock(self):
-        """Same three-way shape, one level deeper: the WORKER spawns its
-        own sub-thread (thread-locals don't inherit, so it is unmarked)
-        which opens a corpus_section while a writer waits behind the
-        dispatcher's reader. Wrapped in propagate_corpus_marker the
-        sub-thread inherits the worker's marker and passes the fairness
-        gate; unwrapped it would hang exactly like the pre-marker bug."""
-        spark = FakeSpark(FakeConf(BASE))
-        in_dispatch = threading.Event()
-        worker_done = threading.Event()
-        writer_done = threading.Event()
-
-        def dispatcher():
-            with sess.corpus_section():
-                in_dispatch.set()
-                assert worker_done.wait(10)
-
-        d = threading.Thread(target=dispatcher)
-        d.start()
-        assert in_dispatch.wait(10)
-
-        def writer():
-            with sess.trickle_scope(spark):
-                pass
-            writer_done.set()
-
-        t = threading.Thread(target=writer)
-        t.start()
-        time.sleep(0.2)  # writer now WAITING on the dispatcher's reader
-
-        sub_done = threading.Event()
-
-        def worker():
-            with sess.corpus_work_marker():
-
-                def sub():
-                    with sess.corpus_section():
-                        pass
-                    sub_done.set()
-
-                s = threading.Thread(
-                    target=sess.propagate_corpus_marker(sub)
-                )
-                s.start()
-                s.join(5)
-            worker_done.set()
-
-        w = threading.Thread(target=worker)
-        w.start()
-        assert sub_done.wait(5), "unmarked sub-thread deadlocked"
-        assert worker_done.wait(5)
-        d.join(10)
-        assert writer_done.wait(10)
-        t.join(10)
-        w.join(10)
-        assert spark.conf.values == BASE
-
-    def test_propagate_marker_noop_from_unmarked_thread(self):
-        """Wrapping from an unmarked spawner must not invent a marker —
-        the sub-thread still yields to waiting writers like any other
-        fresh reader (and trickle_scope still refuses under a REAL
-        marker only)."""
-        calls = []
-
-        def probe():
-            calls.append(getattr(sess._CORPUS_WORK, "depth", 0))
-
-        s = threading.Thread(target=sess.propagate_corpus_marker(probe))
-        s.start()
-        s.join(5)
-        assert calls == [0]
+    def test_in_session_moves_a_cached_frame(self, spark):
+        """``in_session`` rests on the JVM-internal ``Dataset.ofRows``:
+        the moved frame plans in the target session (no AQE root), still
+        reads the source frame's cache, and returns the same rows."""
+        ts = sess.trickle_session(spark)
+        src = spark.range(500).selectExpr("id", "id % 5 AS g").persist()
+        try:
+            src.count()
+            moved = sess.in_session(ts, src)
+            assert moved.sparkSession is ts
+            agg = moved.groupBy("g").count()
+            plan = agg._jdf.queryExecution().executedPlan().toString()
+            assert _root(agg) != "AdaptiveSparkPlan"
+            assert "InMemoryTableScan" in plan
+            assert sorted(agg.collect()) == sorted(
+                src.groupBy("g").count().collect()
+            )
+            back = sess.in_session(spark, moved)
+            assert back.sparkSession is spark
+            assert _root(back.groupBy("g").count()) == "AdaptiveSparkPlan"
+        finally:
+            src.unpersist()
 
 
 class TestDefaultHeap:
@@ -423,73 +202,3 @@ class TestDefaultHeap:
         with open("/proc/meminfo") as fh:
             kb = int(next(l for l in fh if l.startswith("MemTotal")).split()[1])
         assert sess._default_heap() == sess._heap_for_kb(kb)
-
-
-class TestConfLockStress:
-    def test_mixed_regimes_never_deadlock_or_leak_conf(self):
-        """Empirical pin of the whole lock discipline: trickle writers,
-        plain corpus sections, and run_per_table fan-outs (whose workers
-        open their OWN corpus sections — the round-8 deadlock shape)
-        hammer the lock concurrently. Every thread must finish inside the
-        timeout (no silent deadlock) and the conf must be fully restored
-        (no interleaved-restore corruption)."""
-        from presencia_etl_spark.plans.full_sync import TableConfig, run_per_table
-
-        spark = FakeSpark(FakeConf(BASE))
-        stop = threading.Event()
-        errors: list[BaseException] = []
-
-        def trickler():
-            try:
-                while not stop.is_set():
-                    with sess.trickle_scope(spark):
-                        assert (
-                            spark.conf.values["spark.sql.shuffle.partitions"]
-                            == "8"
-                        )
-            except BaseException as e:
-                errors.append(e)
-
-        def sectioner():
-            try:
-                while not stop.is_set():
-                    with sess.corpus_section():
-                        # A writer can never be active while we hold the
-                        # reader: the trickle conf must not be visible.
-                        assert (
-                            spark.conf.values["spark.sql.shuffle.partitions"]
-                            == "32"
-                        )
-            except BaseException as e:
-                errors.append(e)
-
-        cfgs = {f"t{i}": TableConfig(name=f"t{i}") for i in range(4)}
-        tables = {f"t{i}": object() for i in range(4)}
-
-        def dispatcher():
-            try:
-                while not stop.is_set():
-                    run_per_table(
-                        cfgs,
-                        tables,
-                        # Workers re-enter the reader side mid-fan-out.
-                        lambda n, c: sess.corpus_barrier(),
-                        max_parallel=3,
-                    )
-            except BaseException as e:
-                errors.append(e)
-
-        threads = (
-            [threading.Thread(target=trickler) for _ in range(2)]
-            + [threading.Thread(target=sectioner) for _ in range(2)]
-            + [threading.Thread(target=dispatcher)]
-        )
-        for t in threads:
-            t.start()
-        time.sleep(2.0)
-        stop.set()
-        for t in threads:
-            t.join(10)
-        assert not any(t.is_alive() for t in threads), "lock stress deadlocked"
-        assert not errors, errors
-        assert spark.conf.values == BASE

@@ -1,13 +1,14 @@
 #!/usr/bin/env python
-"""Round-14 measurement harness: per-query plan capture + isolated timing.
+"""Per-round measurement harness: per-query plan capture + isolated timing.
 
-Usage:
-  python tools/r13_measure.py plans [before|after] [q17 q34 ...]
+Usage (ROUND is the round tag, e.g. r14):
+  python tools/measure.py ROUND plans [before|after] [q17 q34 ...]
       Capture .explain("formatted") for the named queries (default: all)
-      into plans/r13/<query>_<tag>.txt.
-  python tools/r13_measure.py time q17 q34 ...
-      Time the named queries (median of N reps, same collect() methodology
-      as bench.py) and print per-query seconds + Spark job counts.
+      into plans/ROUND/<query>_<tag>.txt.
+  python tools/measure.py ROUND time q17 q34 ...
+      Time the named queries (median of ${ROUND}_REPS reps, default 5,
+      e.g. R14_REPS; same collect() methodology as bench.py) and print
+      per-query seconds + Spark job counts.
 
 Timing uses the same session shape as bench.py (shuffle_partitions=16,
 warm tables) so numbers are comparable with BENCH_DETAIL.json.
@@ -42,15 +43,18 @@ def _warm(spark, sf_dir):
 
 
 def main() -> None:
-    mode = sys.argv[1] if len(sys.argv) > 1 else "plans"
-    rest = sys.argv[2:]
+    if len(sys.argv) < 2:
+        raise SystemExit(__doc__)
+    rnd = sys.argv[1]
+    mode = sys.argv[2] if len(sys.argv) > 2 else "plans"
+    rest = sys.argv[3:]
     tag = "before"
     if mode == "plans" and rest and rest[0] in ("before", "after"):
         tag = rest[0]
         rest = rest[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(
-        app_name="r14-measure",
+        app_name=f"{rnd}-measure",
         shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "16")),
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -58,7 +62,7 @@ def main() -> None:
     names = rest or list(queries)
 
     if mode == "plans":
-        outdir = REPO / "plans" / "r14"
+        outdir = REPO / "plans" / rnd
         outdir.mkdir(parents=True, exist_ok=True)
         import io
         from contextlib import redirect_stdout
@@ -77,7 +81,7 @@ def main() -> None:
 
     if mode == "time":
         _warm(spark, sf_dir)
-        reps = int(os.environ.get("R14_REPS", "5"))
+        reps = int(os.environ.get(f"{rnd.upper()}_REPS", "5"))
         sc = spark.sparkContext
         tracker = sc.statusTracker()
         # one untimed shakedown of the first query
@@ -90,7 +94,7 @@ def main() -> None:
             runs = []
             jobs = None
             for rep in range(reps):
-                group = f"r14:{name}:{rep}"
+                group = f"{rnd}:{name}:{rep}"
                 sc.setJobGroup(group, name)
                 t0 = time.perf_counter()
                 df = fn(spark, sf_dir)
