@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from presencia_etl_spark.functions.hashing import with_row_hash
 from presencia_etl_spark.functions.keys import composite_key
+from presencia_etl_spark.functions.pushdown import in_list
 
 OP_COL = "_cdc_op"
 KEY_COL = "_cdc_key"
@@ -62,12 +63,25 @@ DIGEST_MICRO_BUCKETS = 16384
 MB_COL = "_cdc_mb"
 
 
+def bucket_of(n: int, key_col: str = KEY_COL):
+    """``pmod(xxhash64(key), n)`` as int: the ``_kb`` bucket of the
+    bucketed layouts at their modulus, the micro-bucket at
+    ``DIGEST_MICRO_BUCKETS``."""
+    return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n)).cast("int")
+
+
 def micro_bucket(key_col: str = KEY_COL, micro: int | None = None):
     """The micro-bucket expression — same hash family as the ``_kb``
     layout so dirty micro-buckets project onto bucket directories."""
-    return F.pmod(
-        F.xxhash64(F.col(key_col)), F.lit(micro or DIGEST_MICRO_BUCKETS)
-    ).cast("int")
+    return bucket_of(micro or DIGEST_MICRO_BUCKETS, key_col)
+
+
+def in_micro_buckets(df: DataFrame, dirty: list[int]) -> DataFrame:
+    """The rows of a ``_cdc_key``-carrying frame whose micro-bucket is in
+    ``dirty``."""
+    return df.withColumn("_mb", micro_bucket()).filter(
+        in_list("_mb", dirty)
+    ).drop("_mb")
 
 
 def _fold_exprs(hash_col: str):
@@ -175,7 +189,7 @@ def digest_compare(
     cost, while a driver fold of a few hundred triples is free. XOR on
     Python ints over int64 values matches Spark's ``bit_xor`` (the
     ``digest_store.apply_delta`` argument). Callers gate this on FS
-    metadata of the source (``writers._src_bytes_hint``) so the collect
+    metadata of the source (``merge_plan._src_bytes_hint``) so the collect
     stays bounded."""
     if os.environ.get("SPARK_GRAFT_DIGEST_PRUNE", "1") == "0":
         return DigestCompare(None, 0, None)
@@ -466,28 +480,17 @@ def diff_states(
         )
 
     ak, bk = _kh(a), _kh(b)
-    if dirty_mb is not None:
-        # The caller already knows the differing micro-buckets (e.g. from
-        # the two tables' persisted digest sidecars — zero scans spent
-        # learning them); skip the digest pass and filter directly.
-        ak = ak.withColumn("_mb", micro_bucket()).filter(
-            _in_mb(dirty_mb)
-        ).drop("_mb")
-        bk = bk.withColumn("_mb", micro_bucket()).filter(
-            _in_mb(dirty_mb)
-        ).drop("_mb")
-    elif digest_prune:
-        dirty, _clean = digest_dirty_micro_buckets(
+    if dirty_mb is None and digest_prune:
+        dirty_mb, _clean = digest_dirty_micro_buckets(
             ak.select(KEY_COL, "row_hash"),
             bk.select(KEY_COL, F.col("row_hash").alias("_tgt_hash")),
         )
-        if dirty is not None:
-            ak = ak.withColumn("_mb", micro_bucket()).filter(
-                _in_mb(dirty)
-            ).drop("_mb")
-            bk = bk.withColumn("_mb", micro_bucket()).filter(
-                _in_mb(dirty)
-            ).drop("_mb")
+    # A caller-supplied dirty_mb (e.g. from the two tables' persisted
+    # digest sidecars — zero scans spent learning it) skips the digest
+    # pass and filters directly.
+    if dirty_mb is not None:
+        ak = in_micro_buckets(ak, dirty_mb)
+        bk = in_micro_buckets(bk, dirty_mb)
     j = ak.alias("l").join(bk.alias("r"), KEY_COL, "full_outer")
     diff = (
         F.when(F.col("r.row_hash").isNull(), F.lit("only_left"))
@@ -507,12 +510,6 @@ def diff_states(
         .filter(F.col("diff").isNotNull())
         .select(*out_keys, "diff")
     )
-
-
-def _in_mb(dirty: list[int]):
-    from presencia_etl_spark.functions.pushdown import in_list
-
-    return in_list("_mb", dirty)
 
 
 def key_set_diff(

@@ -20,7 +20,7 @@ from presencia_etl_spark.functions.hashing import with_row_hash
 from presencia_etl_spark.functions.inference import infer_type_by_name
 from presencia_etl_spark.functions.nulls import empty_to_null
 from presencia_etl_spark.operators.filters import apply_filters, semi_filter
-from presencia_etl_spark.sinks.writers import overwrite_parquet, with_audit_columns
+from presencia_etl_spark.sinks.writers import overwrite_and_count, with_audit_columns
 from presencia_etl_spark.sources.registry import TableConfig
 
 
@@ -121,8 +121,7 @@ def full_sync(
         prepared = prepare_table(tables[name], cfg, semi_source=semi_src)
         key_cols = cfg.key_cols or [prepared.columns[0]]
         out = with_audit_columns(prepared, key_cols)
-        overwrite_parquet(out, f"{target_root}/{name}")
-        return spark.read.parquet(f"{target_root}/{name}").count()
+        return overwrite_and_count(spark, out, f"{target_root}/{name}")
 
     counts = run_per_table(configs, tables, load_one, max_parallel)
     if record_gen and counts:

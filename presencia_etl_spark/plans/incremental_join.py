@@ -293,10 +293,7 @@ def _collect_keyed_probe(probe: DataFrame, key_cols: list[str], nb: int):
     (the dim transition sweep's @old/@new reads) collects once."""
     return (
         cdc.with_cdc_key(probe.distinct(), key_cols)
-        .withColumn(
-            BUCKET_COL,
-            F.pmod(F.xxhash64(F.col(cdc.KEY_COL)), F.lit(nb)).cast("int"),
-        )
+        .withColumn(BUCKET_COL, cdc.bucket_of(nb))
         .select(cdc.KEY_COL, BUCKET_COL)
         .distinct()
         .collect()

@@ -2,9 +2,11 @@
 
 Reference lifecycle: scan+filters → ensure table → load key→(id,hash) map →
 classify INSERT/UPDATE/SKIP → batched inserts + row-wise updates → verify.
-Spark shape: the classify is ONE left-outer hash join (operators/cdc.py) and
-both write halves collapse into the staged parquet merge
-(sinks/writers.merge_upsert_parquet). Tables with no reliable unique key go
+Spark shape: the classify is ONE left-outer hash join in the merge
+writers' shared classify core (sinks/merge_plan.plan_merge), and both
+write halves collapse into the staged parquet merge
+(sinks/writers.merge_upsert_parquet, or its bucketed / merge-on-read
+siblings). Tables with no reliable unique key go
 through full refresh instead (``FULL_REFRESH_TABLES``,
 sync_INCREMENTAL.py:46-48).
 
@@ -24,7 +26,7 @@ from presencia_etl_spark.plans.full_sync import prepare_table
 from presencia_etl_spark.sinks.writers import (
     merge_upsert_parquet,
     merge_upsert_partitioned,
-    overwrite_parquet,
+    overwrite_and_count,
     with_audit_columns,
 )
 from presencia_etl_spark.sources.registry import TableConfig
@@ -43,9 +45,10 @@ def incremental_sync_table(
 
     if cfg.full_refresh:
         prepared = prepare_table(df, cfg, semi_source=semi_source)
-        out = with_audit_columns(prepared, key_cols)
-        overwrite_parquet(out, target_path)
-        return {"insert": out.count(), "update": 0, "skip": 0, "mode": "full_refresh"}
+        n = overwrite_and_count(
+            spark, with_audit_columns(prepared, key_cols), target_path
+        )
+        return {"insert": n, "update": 0, "skip": 0, "mode": "full_refresh"}
 
     # prepare_table computes row_hash over the RAW pre-cast strings (F6);
     # the merge must reuse that hash — recomputing over typed values would

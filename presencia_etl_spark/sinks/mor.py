@@ -57,27 +57,20 @@ from presencia_etl_spark.functions.pushdown import in_list
 from presencia_etl_spark.operators import cdc
 from presencia_etl_spark.sinks import digest_store
 from presencia_etl_spark.sinks.locking import single_writer
+from presencia_etl_spark.sinks.merge_plan import plan_merge
 from presencia_etl_spark.sinks.writers import (
     AUDIT_COLS,
     BUCKET_COL,
     _fetch_dirty_rows,
+    _id_offset,
     _maybe_broadcast,
-    _parallelize_scan,
     _recover_interrupted_swap,
     _reseed_empty_layout,
-    _warn_audit_collisions,
+    _state_absent,
+    is_spark_hidden,
     merge_upsert_partitioned,
     swap_bucket_dirs,
-)
-from presencia_etl_spark.sinks.writers import is_spark_hidden as writers_is_spark_hidden
-from presencia_etl_spark.sinks.writers import (
-    _should_persist_narrow as writers_should_persist_narrow,
-)
-from presencia_etl_spark.sinks.writers import (
-    _is_tiny_source as writers_is_tiny_source,
-)
-from presencia_etl_spark.sinks.writers import (
-    _state_absent as writers_state_absent,
+    with_audit_columns,
 )
 
 BASE_DIR = "base"
@@ -183,16 +176,11 @@ def _gc_orphan_compact_staging(target_path: str) -> None:
             shutil.rmtree(os.path.join(target_path, d), ignore_errors=True)
 
 
-# One copy of Spark's visibility rule, shared with the footer-stats id
-# walk (see writers.is_spark_hidden — duplicated rules drift, and then id
-# allocation and the fileless probe disagree about what the engine sees).
-_is_hidden_name = writers_is_spark_hidden
-
-
 def _has_parquet_files(path: str) -> bool:
     for _root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not _is_hidden_name(d)]
-        if any(f.endswith(".parquet") and not _is_hidden_name(f) for f in files):
+        # Spark's visibility rule, shared with the footer-stats id walk.
+        dirs[:] = [d for d in dirs if not is_spark_hidden(d)]
+        if any(f.endswith(".parquet") and not is_spark_hidden(f) for f in files):
             return True
     return False
 
@@ -399,7 +387,7 @@ def merge_upsert_mor(
         # Known-subset batch: the digest compare would learn nothing (its
         # dirty set IS the batch); maintenance still runs below.
         digest_prune = False
-    if writers_state_absent(target_path):
+    if _state_absent(target_path):
         if txn is not None:
             from presencia_etl_spark.sinks.txn import TxnUnsupported
 
@@ -428,30 +416,16 @@ def merge_upsert_mor(
             "writer, or rebuild it through merge_upsert_mor from scratch."
         )
     meta = _read_meta(target_path)
+    nb = meta["num_buckets"]
     base_path = os.path.join(target_path, BASE_DIR)
     _recover_interrupted_swap(base_path)
     _gc_orphan_staging(target_path)
     _gc_orphan_compact_staging(target_path)
     _recover_empty_base(spark, target_path)
-    _warn_audit_collisions(src)
-    src = _parallelize_scan(src)
-    hashed = (
-        src
-        if "row_hash" in src.columns
-        else cdc.with_row_hash(
-            src, hash_cols or [c for c in src.columns if c not in AUDIT_COLS]
-        )
-    )
-    keyed = cdc.with_cdc_key(hashed, key_cols).withColumn(
-        BUCKET_COL,
-        F.pmod(F.xxhash64(F.col(cdc.KEY_COL)), F.lit(meta["num_buckets"])).cast(
-            "int"
-        ),
-    )
 
     base = spark.read.parquet(base_path)
     infra = set(AUDIT_COLS) | {BUCKET_COL, cdc.KEY_COL, SEQ_COL}
-    src_data = {c for c in hashed.columns if c not in infra and c != "row_hash"}
+    src_data = {c for c in src.columns if c not in infra}
     base_data = {c for c in base.columns if c not in infra}
     if src_data != base_data:
         if txn is not None:
@@ -471,7 +445,7 @@ def merge_upsert_mor(
         # against the widened base.
         compact_mor(spark, target_path)
         result = merge_upsert_partitioned(
-            spark, src, base_path, key_cols, hash_cols, meta["num_buckets"]
+            spark, src, base_path, key_cols, hash_cols, nb
         )
         # The COW fold mutated the base OUTSIDE the delta log: bump the
         # sequence and raise the snapshot floor to it, so change-feed /
@@ -512,290 +486,132 @@ def merge_upsert_mor(
         }
 
     deltas = _read_deltas(spark, target_path)
-    # KNOWN-SUBSET classify prune: a merge that opted out of digest
-    # pruning and is NOT a snapshot-diff sync (streaming micro-batches,
-    # explicit delete_keys change batches, the view-refresh apply) only
-    # needs the target keys that could MATCH the source's — any target
-    # key outside the source keys' buckets classifies nothing. One
-    # bounded probe collect (the _signed_delta/refresh discipline) turns
-    # the classify's target side from a full narrow scan into a
-    # listing-pruned, In-pushed read of O(changes) buckets; batches past
-    # the pushdown bound keep the full scan. delete_missing must see the
-    # whole live universe and never takes this path.
-    subset_keys = None
-    if not digest_prune and not delete_missing:
-        ksample = (
-            keyed.select(cdc.KEY_COL, BUCKET_COL)
-            .limit(KEY_PUSHDOWN_LIMIT + 1)
-            .collect()
-        )
-        if len(ksample) <= KEY_PUSHDOWN_LIMIT:
-            subset_keys = [r[cdc.KEY_COL] for r in ksample]
-            subset_buckets = sorted({r[BUCKET_COL] for r in ksample})
-    # Current (key → hash) view: base overridden by the latest delta. A
-    # key whose latest version is a TOMBSTONE is absent from the view —
-    # its base row is still anti-joined away, and it contributes no hash —
-    # so a re-submitted deleted key classifies as INSERT (fresh identity),
-    # never as an UPDATE of the erased row.
-    base_src = base
-    if subset_keys is not None:
-        base_src = base.filter(in_list(BUCKET_COL, subset_buckets)).filter(
-            in_list(cdc.KEY_COL, subset_keys)
-        )
-    base_kh = base_src.select(cdc.KEY_COL, F.col("row_hash").alias("_tgt_hash"))
-    if deltas is not None:
-        dlatest = _delta_latest(deltas)
-        dl_src = dlatest
-        if subset_keys is not None:
-            # same universe restriction on the delta side — the pruned
-            # view stays exactly filter-equivalent for the source's keys
-            dl_src = dlatest.filter(in_list(cdc.KEY_COL, subset_keys))
-        dl = dl_src.filter(~F.col(DELETED_COL)).select(
-            cdc.KEY_COL, F.col("row_hash").alias("_tgt_hash")
-        )
-        base_kh = base_kh.join(
-            F.broadcast(dl_src.select(cdc.KEY_COL)), cdc.KEY_COL, "left_anti"
-        ).unionByName(dl)
+    dlatest = _delta_latest(deltas) if deltas is not None else None
 
-    # Micro-bucket digest prune (operators/cdc.py): summarize incoming vs
-    # the current (base ∪ delta-latest) key view per pmod(xxhash64(key),
-    # 16K) and classify only the micro-buckets whose digests differ. A
-    # digest-identical state is a proven no-change merge — including "no
-    # missing keys" for delete_missing, since a vanished key perturbs its
-    # micro-bucket's digest — and returns before any join. Sparse merges
-    # join O(changes × rows/16K) rows; the base side of the classify is
-    # additionally DIRECTORY-pruned (micro-bucket mod num_buckets = its
-    # _kb= dir, nested moduli).
-    s_narrow = keyed.select(*key_cols, cdc.KEY_COL, BUCKET_COL, "row_hash")
-    dirty_mb, clean_skip = (None, 0)
-    tgt_dig = None
-    side_loaded = False
-    if digest_prune:
-        # Persisted across digest + classify so the source hash/normalize
-        # runs once whatever the prune decides — small states only (see
-        # writers.DIGEST_PERSIST_MAX_BYTES; the walk covers base+deltas).
-        if writers_should_persist_narrow(target_path):
-            s_narrow = s_narrow.persist()
-        # The target side of the compare comes from the persisted sidecar
-        # when its fingerprint matches the table (base + deltas + meta)
-        # listing — then the LIVE (base ∪ delta-latest) view is never
-        # scanned at all; otherwise one narrow scan computes it and the
-        # merge saves a fresh sidecar after the delta commits.
-        side_dig = (
-            tgt_digest
-            if tgt_digest is not None
-            else digest_store.load(target_path)
+    def view(narrow: DataFrame, kb: list[int] | None) -> DataFrame:
+        """Current (key → hash) view: base overridden by the latest delta.
+        A key whose latest version is a TOMBSTONE is absent from the view
+        — its base row is still anti-joined away, and it contributes no
+        hash — so a re-submitted deleted key classifies as INSERT (fresh
+        identity), never as an UPDATE of the erased row."""
+        base_v, dl_v = base, dlatest
+        if kb is not None:
+            base_v = base.filter(in_list(BUCKET_COL, kb))
+        elif not digest_prune and not delete_missing:
+            # KNOWN-SUBSET prune: a merge that opted out of digest pruning
+            # and is NOT a snapshot-diff sync (streaming micro-batches,
+            # explicit delete_keys change batches, the view-refresh apply)
+            # only needs the target keys that could MATCH the source's.
+            # One bounded probe collect turns the view into a listing-
+            # pruned, In-pushed read of O(changes) buckets; batches past
+            # the pushdown bound keep the full scan. delete_missing must
+            # see the whole live universe and never takes this path.
+            ksample = (
+                narrow.select(cdc.KEY_COL, BUCKET_COL)
+                .limit(KEY_PUSHDOWN_LIMIT + 1)
+                .collect()
+            )
+            if len(ksample) <= KEY_PUSHDOWN_LIMIT:
+                keys = [r[cdc.KEY_COL] for r in ksample]
+                base_v = base.filter(
+                    in_list(BUCKET_COL, sorted({r[BUCKET_COL] for r in ksample}))
+                ).filter(in_list(cdc.KEY_COL, keys))
+                if dl_v is not None:
+                    dl_v = dl_v.filter(in_list(cdc.KEY_COL, keys))
+        kh = base_v.select(cdc.KEY_COL, F.col("row_hash").alias("_tgt_hash"))
+        if dl_v is None:
+            return kh
+        return kh.join(
+            F.broadcast(dl_v.select(cdc.KEY_COL)), cdc.KEY_COL, "left_anti"
+        ).unionByName(
+            dl_v.filter(~F.col(DELETED_COL)).select(
+                cdc.KEY_COL, F.col("row_hash").alias("_tgt_hash")
+            )
         )
-        side_loaded = side_dig is not None
-        dcmp = cdc.digest_compare(
-            s_narrow.select(cdc.KEY_COL, "row_hash"),
-            None if side_loaded else base_kh,
-            tgt_digest=side_dig,
-            collect_src=side_loaded and writers_is_tiny_source(src),
-            src_digest=src_digest if side_loaded else None,
-        )
-        dirty_mb, clean_skip = dcmp.dirty, dcmp.clean_src
-        # Kill switch removes the maintenance cost too, not just the save.
-        tgt_dig = dcmp.tgt_digest if digest_store.enabled() else None
-    elif digest_store.enabled():
-        # Maintenance decoupled from pruning (see writers.merge_upsert_
-        # parquet): a streaming micro-batch merge (digest_prune=False —
-        # its digests are dirty nearly everywhere, so the compare buys
-        # nothing) still keeps a VALID sidecar valid by folding its
-        # classified changes in; without this, one trickle batch between
-        # snapshot syncs knocks the cron steady state back onto the full
-        # scan path. Load-only — never seeds from a scan.
-        tgt_dig = digest_store.load(target_path)
-        side_loaded = tgt_dig is not None
-    if dirty_mb is not None and not dirty_mb:
-        s_narrow.unpersist()
-        if not side_loaded:
-            if txn is not None:
-                txn._defer_digest(target_path, tgt_dig)
-            else:
-                digest_store.save(target_path, tgt_dig)
-        return {
-            "insert": 0, "update": 0, "skip": clean_skip, "delete": 0,
-            "delta_files": 0, "compacted": False,
-        }
-    s_cls = s_narrow
-    if dirty_mb is not None:
-        s_cls = s_narrow.withColumn(
-            "_mb", cdc.micro_bucket()
-        ).filter(in_list("_mb", dirty_mb)).drop("_mb")
-        base_cls = base
-        if cdc.DIGEST_MICRO_BUCKETS % meta["num_buckets"] == 0:
-            dirty_kb = sorted({mb % meta["num_buckets"] for mb in dirty_mb})
-            base_cls = base.filter(in_list(BUCKET_COL, dirty_kb))
-        base_kh = base_cls.select(
-            cdc.KEY_COL, F.col("row_hash").alias("_tgt_hash")
-        )
-        if deltas is not None:
-            base_kh = base_kh.join(
-                F.broadcast(dlatest.select(cdc.KEY_COL)),
-                cdc.KEY_COL,
-                "left_anti",
-            ).unionByName(dl)
-        base_kh = base_kh.withColumn(
-            "_mb", cdc.micro_bucket()
-        ).filter(in_list("_mb", dirty_mb)).drop("_mb")
-    else:
-        clean_skip = 0
-    # delete_missing's anti-join must see the SAME pruned universe on
-    # both sides (a missing key always dirties its micro-bucket, so no
-    # vanished key escapes the filter); reading the keys off s_cls also
-    # reuses the persisted narrow frame instead of re-deriving them.
-    src_key_set = s_cls.select(cdc.KEY_COL)
 
-    joined = s_cls.join(base_kh, cdc.KEY_COL, "left_outer")
-    op = (
-        F.when(F.col("_tgt_hash").isNull(), F.lit(cdc.INSERT))
-        .when(F.col("row_hash") != F.col("_tgt_hash"), F.lit(cdc.UPDATE))
-        .otherwise(F.lit(cdc.SKIP))
+    def save_digest(dig) -> None:
+        # A transactional merge defers the save to commit() — the final
+        # listing doesn't exist until the renames land.
+        if txn is not None:
+            txn._defer_digest(target_path, dig)
+        else:
+            digest_store.save(target_path, dig)
+
+    # The classify core (sinks/merge_plan.py). A digest-identical state is
+    # a proven no-change merge — including "no missing keys" for
+    # delete_missing, since a vanished key perturbs its micro-bucket's
+    # digest.
+    plan = plan_merge(
+        src, target_path, key_cols, hash_cols, view, num_buckets=nb,
+        digest_prune=digest_prune, src_digest=src_digest,
+        tgt_digest=tgt_digest, save_digest=save_digest,
     )
-    dg_cols = cdc.digest_delta_cols() if tgt_dig is not None else []
-    ops = (
-        joined.withColumn(cdc.OP_COL, op)
-        .select(*key_cols, cdc.KEY_COL, BUCKET_COL, cdc.OP_COL, "row_hash", *dg_cols)
-        .cache()
-    )
+    result = {
+        "insert": plan.insert, "update": plan.update, "skip": plan.skip,
+        "delete": 0, "delta_files": 0, "compacted": False,
+    }
+    if plan.ops is None:
+        return result
     src_dirty = None
     upd_keys = None
     missing = None
-    new_dig = None
-    del_victim_src = None
-    keyed_del_cache = None
+    del_cache = None
     try:
-        # ONE bounded collect (≤ 3·num_buckets rows) yields op counts AND
-        # the per-op dirty buckets while materializing the classify cache.
-        op_buckets = (
-            ops.groupBy(cdc.OP_COL, BUCKET_COL)
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        )
-        counts: dict[str, int] = {}
-        for r in op_buckets:
-            counts[r[cdc.OP_COL]] = counts.get(r[cdc.OP_COL], 0) + r["cnt"]
-        n_insert = counts.get(cdc.INSERT, 0)
-        n_update = counts.get(cdc.UPDATE, 0)
-        # Digest-clean micro-buckets' rows never reached the join but are
-        # proven SKIPs — keep the reported counts (and the empty-source
-        # refusal below) src-complete.
-        n_skip = counts.get(cdc.SKIP, 0) + clean_skip
         n_delete = 0
+        live_del = victims = None
         if delete_missing:
-            # Live keys the snapshot no longer contains. base_kh is the
-            # CURRENT key view (tombstone-latest keys already excluded),
-            # so replays converge: once tombstoned, a key isn't live and
-            # can't go "missing" again.
-            # _tgt_hash rides along: the sidecar delta must xor OUT each
-            # deleted key's old (key, hash) fold.
-            missing = base_kh.select(cdc.KEY_COL, "_tgt_hash").join(
-                src_key_set.distinct(), cdc.KEY_COL, "left_anti"
-            ).cache()
-            n_delete = missing.count()
-            if n_delete > 0 and (n_insert + n_update + n_skip) == 0:
-                # The classic snapshot-sync disaster: an EMPTY source (a
-                # failed export, a bad glob) diffed against a live table
-                # would erase every row. Absence of data is not evidence
-                # of deletion — refuse; a true table truncation must be
-                # an explicit delete_where_mor(F.lit(True)).
-                raise ValueError(
-                    "delete_missing refused: the source snapshot is EMPTY "
-                    f"but the target holds {n_delete} live keys — syncing "
-                    "it would erase the entire table. If that is really "
-                    "intended, run delete_where_mor(spark, target, "
-                    "F.lit(True)) explicitly."
-                )
+            # Live keys the snapshot no longer contains — the SAME pruned
+            # universe on both sides (a missing key always dirties its
+            # micro-bucket). The target view already excludes tombstone-
+            # latest keys, so replays converge: once tombstoned, a key
+            # isn't live and can't go "missing" again.
+            live_del = plan.t_cls
         elif delete_keys is not None:
-            # Explicit tombstone keys: fetch their LIVE rows bucket-pruned
-            # at the listing (+ In-pushed below the pushdown bound — the
-            # delete_keys_mor discipline), minus any key the batch also
-            # upserts (the upsert wins; symmetric with delete_missing,
-            # whose source keys are never "missing"). No empty-source
-            # refusal here: a delete-only batch is explicit intent, not a
-            # failed export.
-            keyed_del = (
-                cdc.with_cdc_key(delete_keys, key_cols)
-                .select(cdc.KEY_COL)
-                .distinct()
-                .withColumn(
-                    BUCKET_COL,
-                    F.pmod(
-                        F.xxhash64(F.col(cdc.KEY_COL)),
-                        F.lit(meta["num_buckets"]),
-                    ).cast("int"),
-                )
+            # Explicit tombstone keys. No empty-source refusal here: a
+            # delete-only batch is explicit intent, not a failed export.
+            victims, del_cache = _live_rows_for_keys(
+                spark, target_path, delete_keys, key_cols, nb
             )
-            del_sample = keyed_del.limit(KEY_PUSHDOWN_LIMIT + 1).collect()
-            if len(del_sample) <= KEY_PUSHDOWN_LIMIT:
-                del_buckets = sorted({r[BUCKET_COL] for r in del_sample})
-                live_del = read_mor(spark, target_path, buckets=del_buckets)
-                live_del = live_del.filter(
-                    in_list(cdc.KEY_COL, [r[cdc.KEY_COL] for r in del_sample])
-                )
-            else:
-                keyed_del = keyed_del_cache = keyed_del.cache()
-                del_buckets = [
-                    r[BUCKET_COL]
-                    for r in keyed_del.select(BUCKET_COL).distinct().collect()
-                ]
-                live_del = read_mor(
-                    spark, target_path, buckets=del_buckets
-                ).join(keyed_del.select(cdc.KEY_COL), cdc.KEY_COL, "left_semi")
-            missing = (
-                live_del.select(
+            if victims is not None:
+                live_del = victims.select(
                     cdc.KEY_COL, F.col("row_hash").alias("_tgt_hash")
                 )
-                .join(src_key_set.distinct(), cdc.KEY_COL, "left_anti")
-                .cache()
-            )
+        if live_del is not None:
+            # Minus any key the batch also upserts (the upsert wins).
+            # _tgt_hash rides along: the sidecar delta must xor OUT each
+            # deleted key's old (key, hash) fold.
+            missing = live_del.join(
+                plan.s_cls.select(cdc.KEY_COL).distinct(), cdc.KEY_COL, "left_anti"
+            ).cache()
             n_delete = missing.count()
-            # the victims fetch below re-reads through this pruned frame
-            # instead of a full-table read_mor
-            del_victim_src = live_del
-        if n_insert == 0 and n_update == 0 and n_delete == 0:
+        if delete_missing and n_delete > 0 and plan.insert + plan.update + plan.skip == 0:
+            # The classic snapshot-sync disaster: an EMPTY source (a
+            # failed export, a bad glob) diffed against a live table
+            # would erase every row. Absence of data is not evidence
+            # of deletion — refuse; a true table truncation must be
+            # an explicit delete_where_mor(F.lit(True)).
+            raise ValueError(
+                "delete_missing refused: the source snapshot is EMPTY "
+                f"but the target holds {n_delete} live keys — syncing "
+                "it would erase the entire table. If that is really "
+                "intended, run delete_where_mor(spark, target, "
+                "F.lit(True)) explicitly."
+            )
+        if not plan.changed and n_delete == 0:
             # Idempotent replay / no-op: NOTHING is written — not even an
             # empty delta dir (which would still cost a file open per scan).
-            if tgt_dig is not None and not side_loaded:
-                if txn is not None:
-                    txn._defer_digest(target_path, tgt_dig)
-                else:
-                    digest_store.save(target_path, tgt_dig)
-            return {
-                "insert": 0,
-                "update": 0,
-                "skip": n_skip,
-                "delete": 0,
-                "delta_files": 0,
-                "compacted": False,
-            }
+            plan.save_scanned_digest()
+            return result
 
-        # The merge WILL commit a delta: fold the classified changes
-        # (and snapshot-diff deletes) into the digest now, off the hot
-        # caches; the save happens after the delta (and any auto-
-        # compaction) lands, binding digest to the final listing.
-        if tgt_dig is not None:
-            delta_rows = cdc.collect_digest_delta(
-                ops.filter(F.col(cdc.OP_COL) != cdc.SKIP)
-            )
-            if delta_rows is not None and n_delete > 0:
-                d_del = cdc.collect_digest_delta(
-                    missing.select(
-                        cdc.KEY_COL, *cdc.digest_delete_delta_cols()
-                    )
-                )
-                delta_rows = (
-                    delta_rows + d_del if d_del is not None else None
-                )
-            if delta_rows is not None:
-                new_dig = digest_store.apply_delta(tgt_dig, delta_rows)
+        # The merge WILL commit a delta: fold the classified changes (and
+        # deletes) into the digest now; the save happens after the delta
+        # (and any auto-compaction) lands, binding digest to the listing.
+        new_dig = plan.fold_digest(missing if n_delete > 0 else None)
 
-        n_dirty = n_insert + n_update
-        dirty_ops = ops.filter(F.col(cdc.OP_COL) != cdc.SKIP)
+        n_dirty = plan.insert + plan.update
         src_dirty = _fetch_dirty_rows(
-            hashed,
-            dirty_ops,
+            plan.hashed,
+            plan.dirty_ops,
             key_cols,
             n_dirty,
             carry=[cdc.OP_COL, "row_hash", cdc.KEY_COL, BUCKET_COL],
@@ -815,17 +631,10 @@ def merge_upsert_mor(
             .cache()
         )
         parts: list[DataFrame] = []
-        if n_update > 0:
-            upd_buckets = sorted(
-                {
-                    r[BUCKET_COL]
-                    for r in op_buckets
-                    if r[cdc.OP_COL] == cdc.UPDATE
-                }
-            )
-            base_cur = base.filter(in_list(BUCKET_COL, upd_buckets))
+        if plan.update > 0:
+            base_cur = base.filter(in_list(BUCKET_COL, plan.buckets(cdc.UPDATE)))
             delta_cur = deltas
-            if n_update <= KEY_PUSHDOWN_LIMIT:
+            if plan.update <= KEY_PUSHDOWN_LIMIT:
                 # Second pruning level under the _kb= dir pruning: the
                 # (bounded) update keys push into the parquet scans as an
                 # In(_cdc_key) filter — the bucket files are KEY-SORTED
@@ -850,7 +659,7 @@ def merge_upsert_mor(
             w = Window.partitionBy(cdc.KEY_COL).orderBy(F.col(SEQ_COL).desc())
             cur = (
                 cur.join(
-                    _maybe_broadcast(upd_keys.select(cdc.KEY_COL), n_update),
+                    _maybe_broadcast(upd_keys.select(cdc.KEY_COL), plan.update),
                     cdc.KEY_COL,
                     "left_semi",
                 )
@@ -860,49 +669,37 @@ def merge_upsert_mor(
             )
             updated = (
                 src_dirty.filter(F.col(cdc.OP_COL) == cdc.UPDATE)
-                .join(_maybe_broadcast(cur, n_update), cdc.KEY_COL)
+                .join(_maybe_broadcast(cur, plan.update), cdc.KEY_COL)
                 .withColumn("updated_at", F.current_timestamp())
             )
             parts.append(updated.select(*data_cols, *audit))
-        if n_insert > 0:
-            from presencia_etl_spark.sinks.writers import with_audit_columns
-
-            from presencia_etl_spark.sinks.writers import _max_id_stat
-
+        if plan.insert > 0:
             # Footer-stats max over base AND live deltas (one walk each);
             # falls back to the scans only when stats are absent.
-            max_id = _max_id_stat(base_path)
-            d_max = _max_id_stat(os.path.join(target_path, DELTA_DIR))
-            if max_id is None:
-                max_id = base.agg(F.max("id")).collect()[0][0] or 0
+            max_id = _id_offset(base_path, base)
             if deltas is not None:
-                if d_max is None:
-                    d_max = deltas.agg(F.max("id")).collect()[0][0] or 0
-                max_id = max(max_id, d_max)
+                max_id = max(
+                    max_id, _id_offset(os.path.join(target_path, DELTA_DIR), deltas)
+                )
             inserted = with_audit_columns(
                 src_dirty.filter(F.col(cdc.OP_COL) == cdc.INSERT).select(
                     *data_cols, "row_hash", cdc.KEY_COL, BUCKET_COL
                 ),
                 key_cols,
-                id_offset=int(max_id),
+                id_offset=max_id,
             )
             parts.append(inserted.select(*data_cols, *audit))
 
         if n_delete > 0:
-            # Snapshot-diff tombstones: the vanished keys' full current
-            # images flagged deleted, committed in the SAME delta as the
-            # upserts (one snapshot = one atomic sequence number). The
-            # upsert parts gain an explicit false flag so the dir stays
-            # single-schema.
-            victim_src = (
-                del_victim_src
-                if del_victim_src is not None
-                else read_mor(spark, target_path)
-            )
-            victims = victim_src.join(
+            # Tombstones: the vanished/named keys' full current images
+            # flagged deleted, committed in the SAME delta as the upserts
+            # (one batch = one atomic sequence number). The upsert parts
+            # gain an explicit false flag so the dir stays single-schema.
+            if victims is None:
+                victims = read_mor(spark, target_path)
+            tomb = victims.join(
                 _maybe_broadcast(missing, n_delete), cdc.KEY_COL, "left_semi"
-            )
-            tomb = victims.withColumn("updated_at", F.current_timestamp())
+            ).withColumn("updated_at", F.current_timestamp())
             parts = [p.withColumn(DELETED_COL, F.lit(False)) for p in parts]
             parts.append(
                 tomb.select(*data_cols, *audit).withColumn(
@@ -921,20 +718,10 @@ def merge_upsert_mor(
     finally:
         # Caches release on failure too — a failed merge must not leak
         # persisted frames for the session lifetime.
-        ops.unpersist()
-        # Released HERE, not at the op-counts collect: delete_missing's
-        # anti-join reads its source key set off this persisted frame
-        # after the collect — unpersisting earlier silently re-ran the
-        # whole source scan + key normalize for snapshot-diff syncs.
-        s_narrow.unpersist()
-        if src_dirty is not None:
-            src_dirty.unpersist()
-        if upd_keys is not None:
-            upd_keys.unpersist()
-        if missing is not None:
-            missing.unpersist()
-        if keyed_del_cache is not None:
-            keyed_del_cache.unpersist()
+        plan.release()
+        for df in (src_dirty, upd_keys, missing, del_cache):
+            if df is not None:
+                df.unpersist()
 
     compacted = False
     if (
@@ -950,20 +737,50 @@ def merge_upsert_mor(
         compacted = True
     # After the delta (and any auto-compaction — which preserves live
     # content) is on disk: the fingerprint binds the maintained digest
-    # to exactly this listing. A transactional merge defers the save to
-    # commit() — the final listing doesn't exist until the renames land.
-    if txn is not None:
-        txn._defer_digest(target_path, new_dig)
-    else:
-        digest_store.save(target_path, new_dig)
+    # to exactly this listing.
+    save_digest(new_dig)
     return {
-        "insert": n_insert,
-        "update": n_update,
-        "skip": n_skip,
+        **result,
         "delete": n_delete,
         "delta_files": n_files,
         "compacted": compacted,
     }
+
+
+def _live_rows_for_keys(
+    spark: SparkSession,
+    target_path: str,
+    keys: DataFrame,
+    key_cols: list[str],
+    num_buckets: int,
+) -> tuple[DataFrame | None, DataFrame | None]:
+    """The live rows of an explicit key set (the erasure / change-batch
+    tombstone fetch), from ONE bounded collect of its normalized
+    (key, bucket) pairs: only the keys' ``_kb=`` dirs are listed
+    (``read_mor(buckets=...)``) and, up to ``KEY_PUSHDOWN_LIMIT`` keys,
+    the keys are In-pushed into the scans (row-group skipping in the
+    key-sorted files). Larger key sets are cached and semi-joined.
+    Returns (rows — None for an empty key set, cache to unpersist)."""
+    keyed = (
+        cdc.with_cdc_key(keys, key_cols)
+        .select(cdc.KEY_COL)
+        .distinct()
+        .withColumn(BUCKET_COL, cdc.bucket_of(num_buckets))
+    )
+    sample = keyed.limit(KEY_PUSHDOWN_LIMIT + 1).collect()
+    if not sample:
+        return None, None
+    if len(sample) <= KEY_PUSHDOWN_LIMIT:
+        live = read_mor(
+            spark, target_path, buckets=sorted({r[BUCKET_COL] for r in sample})
+        )
+        return live.filter(in_list(cdc.KEY_COL, [r[cdc.KEY_COL] for r in sample])), None
+    keyed = keyed.cache()
+    buckets = [r[BUCKET_COL] for r in keyed.select(BUCKET_COL).distinct().collect()]
+    live = read_mor(spark, target_path, buckets=buckets).join(
+        keyed.select(cdc.KEY_COL), cdc.KEY_COL, "left_semi"
+    )
+    return live, keyed
 
 
 def _auto_keep_last(compact_every: int, compact_keep_last: int | None) -> int:
@@ -1088,8 +905,8 @@ def delete_keys_mor(
     Unlike the predicate variant, the scan is BUCKET-PRUNED: the key
     frame's normalized ``_cdc_key`` hashes to its bucket, only those
     ``_kb=`` dirs are read (hive partition pruning), and the live view is
-    semi-joined against the (broadcast) key set — at 100 TB a thousand
-    erasure requests touch a handful of buckets, not the table. Keys are
+    filtered to the key set (``_live_rows_for_keys``) — at 100 TB a
+    thousand erasure requests touch a handful of buckets, not the table. Keys are
     normalized exactly like the merge path, so a key that round-tripped
     through any writer matches verbatim."""
     if not os.path.exists(_meta_path(target_path)):
@@ -1101,44 +918,18 @@ def delete_keys_mor(
     _gc_orphan_staging(target_path)
     _gc_orphan_compact_staging(target_path)
     _recover_empty_base(spark, target_path)
-    meta = _read_meta(target_path)
-    keyed = (
-        cdc.with_cdc_key(keys, key_cols)
-        .select(cdc.KEY_COL)
-        .distinct()
-        .withColumn(
-            BUCKET_COL,
-            F.pmod(
-                F.xxhash64(F.col(cdc.KEY_COL)), F.lit(meta["num_buckets"])
-            ).cast("int"),
-        )
-        .cache()
+    victims, cached = _live_rows_for_keys(
+        spark, target_path, keys, key_cols, _read_meta(target_path)["num_buckets"]
     )
     try:
-        dirty = [
-            r[BUCKET_COL] for r in keyed.select(BUCKET_COL).distinct().collect()
-        ]
-        if not dirty:
+        if victims is None:
             return {"delete": 0, "delta_files": 0, "compacted": False}
-        n_keys = keyed.count()
-        victims = read_mor(spark, target_path, buckets=dirty)
-        if n_keys <= KEY_PUSHDOWN_LIMIT:
-            # Row-group-level pruning inside the dirty buckets (see
-            # KEY_PUSHDOWN_LIMIT): the erasure scan reads a few row
-            # groups, not whole buckets.
-            pushed = [r[cdc.KEY_COL] for r in keyed.select(cdc.KEY_COL).collect()]
-            victims = victims.filter(in_list(cdc.KEY_COL, pushed))
-        else:
-            victims = victims.join(
-                _maybe_broadcast(keyed.select(cdc.KEY_COL), n_keys),
-                cdc.KEY_COL,
-                "left_semi",
-            )
         return _tombstone_commit(
             spark, target_path, victims, compact_every, compact_keep_last
         )
     finally:
-        keyed.unpersist()
+        if cached is not None:
+            cached.unpersist()
 
 
 def read_mor(

@@ -31,14 +31,19 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from presencia_etl_spark.functions.partitioning import parallelize_scan
-from presencia_etl_spark.sinks import digest_store
-from presencia_etl_spark.sinks.locking import single_writer
 from presencia_etl_spark.functions.pushdown import in_list
 from presencia_etl_spark.operators import cdc
+from presencia_etl_spark.sinks import digest_store
+from presencia_etl_spark.sinks.locking import single_writer
+from presencia_etl_spark.sinks.merge_plan import (
+    AUDIT_COLS,
+    BUCKET_COL,
+    MergePlan,
+    hash_source,
+    key_hash_view,
+    plan_merge,
+)
 
-AUDIT_COLS = ("id", "row_hash", "created_at", "updated_at")
-BUCKET_COL = "_kb"
 # Bucket-count sidecar for the partitioned layout (underscore-prefixed →
 # invisible to Spark's parquet listing, like _mor_meta.json). The modulus
 # is a property of the STATE, not of the call: a merge run with a
@@ -259,10 +264,7 @@ def rebucket(
             f"persisted {cdc.KEY_COL}; rebucket applies to "
             "merge_upsert_partitioned / MOR layouts only"
         )
-    out = tgt.drop(BUCKET_COL).withColumn(
-        BUCKET_COL,
-        F.pmod(F.xxhash64(F.col(cdc.KEY_COL)), F.lit(new_buckets)).cast("int"),
-    )
+    out = tgt.drop(BUCKET_COL).withColumn(BUCKET_COL, cdc.bucket_of(new_buckets))
     staged = target_path.rstrip("/") + "__rebucket_staged"
     retired = target_path.rstrip("/") + "__rebucket_retired"
     shutil.rmtree(staged, ignore_errors=True)
@@ -563,97 +565,6 @@ def _staged_is_journaled(target_path: str, staged: str) -> bool:
         return False
 
 
-def _warn_audit_collisions(src: DataFrame) -> None:
-    """A source data column named like the audit envelope (other than a
-    trusted pre-computed row_hash) is silently shadowed by the surrogate
-    audit value — a natural key called ``id`` would be LOST. Warn loudly;
-    callers should rename before merging."""
-    clash = [c for c in src.columns if c in AUDIT_COLS and c != "row_hash"]
-    if clash:
-        warnings.warn(
-            f"source columns {clash} collide with the audit envelope "
-            f"{AUDIT_COLS}; they will be replaced by surrogate audit values "
-            "— rename them before merging if they carry data",
-            stacklevel=3,
-        )
-
-
-# Persist the narrow (key, hash) classify frame only for states up to
-# this size (fs-metadata decision, no job). The persist exists to keep
-# the source hash to ONE pass when the classify re-reads a large
-# fraction (dense merges) — but materializing a 60M-row narrow cache
-# measured ~35 s of pure storage cost while a SPARSE merge re-reads
-# almost none of it (the dirty-micro-bucket filter pushes below the
-# hash projection, so the recompute is proportional to the dirty
-# fraction). Small states persist (the dense case is cheap to protect);
-# large states skip it — a large AND dense merge (the rare quadrant)
-# pays the hash twice, bounded at ~1.4× of the unpruned classify.
-DIGEST_PERSIST_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_DIGEST_PERSIST_MAX_MB", "1024")
-) * (1 << 20)
-
-
-def _du_until(path: str, cap: int) -> int:
-    """Total file bytes under ``path``, walking only until ``cap`` is
-    exceeded (returns cap+1 then) — the decision needs one bit, not an
-    exact du of a 100 TB tree."""
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                continue
-            if total > cap:
-                return cap + 1
-    return total
-
-
-def _should_persist_narrow(target_path: str) -> bool:
-    return _du_until(target_path, DIGEST_PERSIST_MAX_BYTES) <= DIGEST_PERSIST_MAX_BYTES
-
-
-# A snapshot source at or under this size takes the driver-side digest
-# fold (one shuffle-free collect) instead of the 16K-modulus aggregation
-# — the trickle-batch fixed-cost rule (CLAUDE.md) applied to the digest
-# compare itself. Bounded: 1 MiB of parquet is at most a few hundred
-# thousand rows of three 8-byte fields driver-side. Read at call time so
-# tests (and operators) can flip it without a module reload.
-def _small_src_bytes() -> int:
-    return int(os.environ.get("SPARK_GRAFT_SMALL_SRC_KB", "1024")) * 1024
-
-
-def _src_bytes_hint(df: DataFrame) -> int | None:
-    """Driver-side size of a FILE-BACKED frame: sum of its backing files'
-    sizes (`inputFiles()` reads the already-resolved listing — no Spark
-    job). None for non-file sources (JDBC, in-memory) or non-local URIs,
-    where no cheap driver stat exists — callers then keep the
-    distributed path, the safe default."""
-    from urllib.parse import unquote, urlparse
-
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    total = 0
-    for f in files:
-        u = urlparse(f)
-        if u.scheme not in ("", "file"):
-            return None
-        try:
-            total += os.path.getsize(unquote(u.path) or f)
-        except OSError:
-            return None
-    return total
-
-
-def _is_tiny_source(df: DataFrame) -> bool:
-    h = _src_bytes_hint(df)
-    return h is not None and h <= _small_src_bytes()
-
-
 BROADCAST_KEY_LIMIT = 5_000_000
 
 
@@ -667,14 +578,6 @@ def _maybe_broadcast(df: DataFrame, n_rows: int, limit: int | None = None):
     if limit is None:
         limit = BROADCAST_KEY_LIMIT
     return F.broadcast(df) if n_rows <= limit else df
-
-
-def _parallelize_scan(df: DataFrame) -> DataFrame:
-    """Spread the expensive per-row projections (key normalize, SHA-256
-    row hash) across the session's full parallelism — measured 8→3 s on
-    the bench full load. See functions/partitioning.py."""
-    return parallelize_scan(df)
-
 
 
 def _max_id_stat(path: str):
@@ -711,6 +614,16 @@ def _max_id_stat(path: str):
     return best
 
 
+def _id_offset(path: str, df: DataFrame) -> int:
+    """The surrogate-id offset for rows inserted into the state at
+    ``path``: max(id) from footer stats, else one ``max(id)`` agg over
+    ``df`` (that state's frame); 0 for an empty state."""
+    max_id = _max_id_stat(path)
+    if max_id is None:
+        max_id = df.agg(F.max("id")).collect()[0][0] or 0
+    return int(max_id)
+
+
 def _fetch_dirty_rows(
     src_wide: DataFrame,
     dirty_ops: DataFrame,
@@ -742,35 +655,6 @@ def _fetch_dirty_rows(
     return d.join(_maybe_broadcast(b, n_dirty), cond).drop(
         *[f"_b_{c}" for c in key_cols]
     )
-
-
-def _widen_for_drift(
-    src: DataFrame, tgt: DataFrame
-) -> tuple[DataFrame, DataFrame, list[str]]:
-    """Schema evolution on merge (the reference's documented drift failure,
-    context/context.md:900-903): a column the source GREW is added to the
-    target frame NULL-filled (old rows keep NULL until their key is next
-    updated), and a column the source DROPPED is added back to the source
-    as NULL so in-flight updates don't lose it. Because row hashes cover
-    the value set, every overlapping key reclassifies as UPDATE on the
-    first post-drift merge and settles to SKIP on the next (idempotency
-    holds). Returns (src, tgt, drifted) — ``drifted`` forces callers onto
-    their full-rewrite path: appending or bucket-pruning with a widened
-    schema would leave mixed-schema parquet files that a plain (non-
-    mergeSchema) read silently truncates."""
-    infra = set(AUDIT_COLS) | {BUCKET_COL, cdc.KEY_COL}
-    tgt_data = [f for f in tgt.schema.fields if f.name not in infra]
-    src_names = set(src.columns)
-    drifted = False
-    for f in src.schema.fields:
-        if f.name not in tgt.columns and f.name not in infra:
-            tgt = tgt.withColumn(f.name, F.lit(None).cast(f.dataType))
-            drifted = True
-    for f in tgt_data:
-        if f.name not in src_names:
-            src = src.withColumn(f.name, F.lit(None).cast(f.dataType))
-            drifted = True
-    return src, tgt, drifted
 
 
 def with_audit_columns(
@@ -828,6 +712,15 @@ def overwrite_parquet(df: DataFrame, path: str) -> None:
     shutil.rmtree(retired, ignore_errors=True)
     df.write.mode("overwrite").parquet(staged)
     _commit_whole_dir_swap(path, staged, retired)
+
+
+def overwrite_and_count(spark: SparkSession, df: DataFrame, path: str) -> int:
+    """``overwrite_parquet``, returning the row count of the WRITTEN files
+    (parquet footer metadata) — counting ``df`` would re-run its whole
+    source plan. The read takes ``df``'s schema: inferring it from the
+    files costs a Spark job of its own, and a count reads no column."""
+    overwrite_parquet(df, path)
+    return spark.read.schema(df.schema).parquet(path).count()
 
 
 @single_writer("path")
@@ -986,6 +879,72 @@ def write_jdbc_append(df: DataFrame, url: str, table: str, properties: dict[str,
     )
 
 
+def _cow_rows(
+    plan: MergePlan,
+    key_cols: list[str],
+    target_path: str,
+    scope: DataFrame | None,
+) -> tuple[DataFrame, DataFrame]:
+    """The rows a copy-on-write lander writes: ``scope`` (the target rows
+    being rewritten) minus the updated keys, ∪ the updated rows (keeping
+    their target ``id``/``created_at``, ``updated_at`` refreshed), ∪ the
+    inserted rows with fresh ids. ``scope=None`` yields the inserted rows
+    only (the flat insert-only append). The wide source rows come from
+    ONE re-scan joined against the small dirty set (``_fetch_dirty_rows``)
+    — never a table-sized cache. Returns (rows, the cached dirty source
+    rows the caller unpersists after the write)."""
+    extra = [BUCKET_COL] if plan.num_buckets else []
+    data_cols = [
+        c
+        for c in plan.tgt.columns
+        if c not in AUDIT_COLS and c not in (BUCKET_COL, cdc.KEY_COL)
+    ]
+    cols = [*data_cols, "row_hash", cdc.KEY_COL, "id", "created_at", "updated_at", *extra]
+    src_dirty = _fetch_dirty_rows(
+        plan.hashed,
+        plan.dirty_ops,
+        key_cols,
+        plan.insert + plan.update,
+        carry=[cdc.OP_COL, "row_hash", cdc.KEY_COL, *extra],
+    ).cache()
+    parts = []
+    if scope is not None:
+        tgt_k = cdc.ensure_cdc_key(scope, key_cols)
+        upd_keys = _maybe_broadcast(
+            plan.dirty_ops.filter(F.col(cdc.OP_COL) == cdc.UPDATE).select(cdc.KEY_COL),
+            plan.update,
+        )
+        # The updated rows' audit identity comes from the target —
+        # pre-filtered to the updated keys so the join's build side is tiny.
+        tgt_upd = tgt_k.select(cdc.KEY_COL, "id", "created_at").join(
+            upd_keys, cdc.KEY_COL, "left_semi"
+        )
+        updated = (
+            src_dirty.filter(F.col(cdc.OP_COL) == cdc.UPDATE)
+            .join(_maybe_broadcast(tgt_upd, plan.update), cdc.KEY_COL)
+            .withColumn("updated_at", F.current_timestamp())
+        )
+        parts = [
+            tgt_k.join(upd_keys, cdc.KEY_COL, "left_anti").select(*cols),
+            updated.select(*cols),
+        ]
+    if plan.insert > 0:
+        # max(id) is a full-target scan without footer stats — only pay
+        # it when inserting.
+        inserted = with_audit_columns(
+            src_dirty.filter(F.col(cdc.OP_COL) == cdc.INSERT).select(
+                *data_cols, "row_hash", cdc.KEY_COL, *extra
+            ),
+            key_cols,
+            id_offset=_id_offset(target_path, plan.tgt),
+        )
+        parts.append(inserted.select(*cols))
+    rows = parts[0]
+    for p in parts[1:]:
+        rows = rows.unionByName(p)
+    return rows, src_dirty
+
+
 @single_writer("target_path")
 def merge_upsert_partitioned(
     spark: SparkSession,
@@ -1013,34 +972,19 @@ def merge_upsert_partitioned(
     This is the plan shape of Delta's MERGE with partition pruning, with no
     non-core dependency.
     """
-    # Trust a pre-computed row_hash (pipelines hash RAW pre-cast strings —
-    # recomputing over typed values, and over the hash column itself, would
-    # misclassify every row as UPDATE). Default hash scope excludes the
-    # audit envelope for the same reason.
     _recover_interrupted_rebucket(target_path)
-    _warn_audit_collisions(src)
-    src = _parallelize_scan(src)
     if os.path.exists(target_path):
         num_buckets = _resolve_num_buckets(target_path, num_buckets)
-    if "row_hash" in src.columns:
-        hashed = src
-    else:
-        hashed = cdc.with_row_hash(
-            src, hash_cols or [c for c in src.columns if c not in AUDIT_COLS]
-        )
-
-    def keyed_of(h: DataFrame) -> DataFrame:
-        k = cdc.with_cdc_key(h, key_cols)
-        return k.withColumn(
-            BUCKET_COL,
-            F.pmod(F.xxhash64(F.col(cdc.KEY_COL)), F.lit(num_buckets)).cast("int"),
-        )
-
     if _state_absent(target_path):
         # The normalized _cdc_key is persisted alongside row_hash: later
         # syncs read both from parquet instead of re-running the normalize
         # expression over the whole target.
-        out = with_audit_columns(keyed_of(hashed), key_cols)
+        out = with_audit_columns(
+            cdc.with_cdc_key(hash_source(src, hash_cols), key_cols).withColumn(
+                BUCKET_COL, cdc.bucket_of(num_buckets)
+            ),
+            key_cols,
+        )
         # Align the shuffle with the output layout: one task per bucket →
         # one file per bucket dir. Without this, every writing task spills
         # a file into every bucket it touches and the target accretes
@@ -1073,140 +1017,29 @@ def merge_upsert_partitioned(
             "with merge_upsert_partitioned from a full load, or keep "
             "syncing it with merge_upsert_parquet."
         )
-    # Pre-persisted-key targets lack _cdc_key; any rewrite must then touch
-    # every bucket (like drift) or the partial write would leave mixed
-    # schemas across bucket dirs.
-    key_migration = cdc.KEY_COL not in tgt.columns
-    hashed, tgt, drifted = _widen_for_drift(hashed, tgt)
-    keyed = keyed_of(hashed)
-    t = cdc.ensure_cdc_key(tgt, key_cols).select(
-        F.col(cdc.KEY_COL), F.col("row_hash").alias("_tgt_hash")
-    )
-    # Micro-bucket digest prune (see operators/cdc.py): summarize both
-    # sides per pmod(xxhash64(key), 16K), join only the rows of micro-
-    # buckets whose digests differ. A proven no-change merge returns
-    # here without any classify join at all; a sparse merge joins
-    # O(changes × rows/16K) instead of shuffling both full sides.
-    s_narrow = keyed.select(*key_cols, cdc.KEY_COL, BUCKET_COL, "row_hash")
-    dirty_mb, clean_skip = (None, 0)
-    tgt_dig = None
-    side_loaded = False
-    if digest_prune and not (drifted or key_migration):
-        # Under drift / key backfill every bucket rewrites regardless and
-        # stored hashes cover a different column set — the digest pass
-        # would be spent to learn nothing. Callers that merge KNOWN
-        # subsets (streaming micro-batches) opt out: their digests are
-        # dirty nearly everywhere, so the pass buys nothing.
-        # The narrow frame is PERSISTED across the digest and the classify
-        # so the source-side hash/normalize expressions run exactly once
-        # whether the prune accepts, narrows, or declines (unpersisted as
-        # soon as the classify cache is materialized) — but only for
-        # small states, where the dense case it protects is plausible
-        # and the store is cheap (see DIGEST_PERSIST_MAX_BYTES).
-        if _should_persist_narrow(target_path):
-            s_narrow = s_narrow.persist()
-        # tgt_digest: caller-validated under the target's writer lock
-        # (replica sync) — same dict the caller pruned from, and one
-        # fewer fingerprint walk. See merge_upsert_mor's docstring.
-        side_dig = (
-            tgt_digest
-            if tgt_digest is not None
-            else digest_store.load(target_path)
-        )
-        side_loaded = side_dig is not None
-        dcmp = cdc.digest_compare(
-            s_narrow.select(cdc.KEY_COL, "row_hash"),
-            None if side_loaded else t,
-            tgt_digest=side_dig,
-            collect_src=side_loaded and _is_tiny_source(src),
-            src_digest=src_digest if side_loaded else None,
-        )
-        dirty_mb, clean_skip = dcmp.dirty, dcmp.clean_src
-        # Kill switch removes the maintenance cost too, not just the save.
-        tgt_dig = dcmp.tgt_digest if digest_store.enabled() else None
-    elif digest_store.enabled() and not (drifted or key_migration):
-        # Maintenance decoupled from pruning (see merge_upsert_parquet):
-        # a micro-batch merge keeps a valid sidecar valid by folding its
-        # classified changes; stale/absent sidecars are never seeded here.
-        tgt_dig = digest_store.load(target_path)
-        side_loaded = tgt_dig is not None
-    if dirty_mb is not None and not dirty_mb:
-        s_narrow.unpersist()
-        if not side_loaded:
-            digest_store.save(target_path, tgt_dig)
-        return {
-            "insert": 0, "update": 0, "skip": clean_skip,
-            "buckets_rewritten": 0,
-        }
-    s_cls = s_narrow
-    if dirty_mb is not None:
-        s_cls = s_narrow.withColumn(
-            "_mb", cdc.micro_bucket()
-        ).filter(in_list("_mb", dirty_mb)).drop("_mb")
-        t_src = tgt
-        if cdc.DIGEST_MICRO_BUCKETS % num_buckets == 0:
-            # Directory-level prune first: a dirty micro-bucket lives in
-            # exactly one _kb= dir (same hash, nested moduli).
-            dirty_kb = sorted({mb % num_buckets for mb in dirty_mb})
-            t_src = tgt.filter(in_list(BUCKET_COL, dirty_kb))
-        t = cdc.ensure_cdc_key(t_src, key_cols).select(
-            F.col(cdc.KEY_COL), F.col("row_hash").alias("_tgt_hash")
-        ).withColumn("_mb", cdc.micro_bucket()).filter(
-            in_list("_mb", dirty_mb)
-        ).drop("_mb")
-    else:
-        clean_skip = 0
-    # ONE narrow classify pass: cache only (raw keys, key, bucket, op,
-    # hash) — the wide rewrite inputs are rebuilt below from the small
-    # dirty sets, re-scanning parquet instead of caching table-sized
-    # source rows.
-    joined = s_cls.join(t, cdc.KEY_COL, "left_outer")
-    op = (
-        F.when(F.col("_tgt_hash").isNull(), F.lit(cdc.INSERT))
-        .when(F.col("row_hash") != F.col("_tgt_hash"), F.lit(cdc.UPDATE))
-        .otherwise(F.lit(cdc.SKIP))
-    )
-    dg_cols = cdc.digest_delta_cols() if tgt_dig is not None else []
-    ops = (
-        joined.withColumn(cdc.OP_COL, op)
-        .select(*key_cols, cdc.KEY_COL, BUCKET_COL, cdc.OP_COL, "row_hash", *dg_cols)
-        .cache()
-    )
-    # ONE bounded collect (≤ 3·num_buckets rows) yields the op counts AND
-    # the dirty-bucket list, and materializes the classify cache every
-    # later step reuses — previously two jobs each re-entered the cache.
-    try:
-        op_buckets = (
-            ops.groupBy(cdc.OP_COL, BUCKET_COL)
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        )
-    finally:
-        s_narrow.unpersist()
-    counts: dict[str, int] = {}
-    for r in op_buckets:
-        counts[r[cdc.OP_COL]] = counts.get(r[cdc.OP_COL], 0) + r["cnt"]
-    n_insert, n_update = counts.get(cdc.INSERT, 0), counts.get(cdc.UPDATE, 0)
-    # Rows in digest-clean micro-buckets never reached the join but are
-    # proven SKIPs — keep the reported counts src-complete.
-    n_skip = counts.get(cdc.SKIP, 0) + clean_skip
-    if n_insert == 0 and n_update == 0:
-        ops.unpersist()
-        if tgt_dig is not None and not side_loaded:
-            digest_store.save(target_path, tgt_dig)
-        return {"insert": 0, "update": 0, "skip": n_skip, "buckets_rewritten": 0}
-    new_dig = None
-    if tgt_dig is not None:
-        delta = cdc.collect_digest_delta(
-            ops.filter(F.col(cdc.OP_COL) != cdc.SKIP)
-        )
-        if delta is not None:
-            new_dig = digest_store.apply_delta(tgt_dig, delta)
 
-    dirty = sorted(
-        {r[BUCKET_COL] for r in op_buckets if r[cdc.OP_COL] != cdc.SKIP}
+    def view(_narrow: DataFrame, kb: list[int] | None) -> DataFrame:
+        # Directory-level prune: only the dirty micro-buckets' _kb= dirs.
+        return key_hash_view(
+            tgt if kb is None else tgt.filter(in_list(BUCKET_COL, kb)), key_cols
+        )
+
+    plan = plan_merge(
+        src, target_path, key_cols, hash_cols, view, num_buckets=num_buckets,
+        tgt=tgt, digest_prune=digest_prune, src_digest=src_digest,
+        tgt_digest=tgt_digest,
     )
-    if drifted or key_migration:
+    result = {
+        "insert": plan.insert, "update": plan.update, "skip": plan.skip,
+        "buckets_rewritten": 0,
+    }
+    if not plan.changed:
+        plan.release()
+        plan.save_scanned_digest()
+        return result
+    new_dig = plan.fold_digest()
+    dirty = plan.buckets(cdc.INSERT, cdc.UPDATE)
+    if plan.rewrite_all:
         # Schema drift (and the one-time _cdc_key backfill) must reach
         # EVERY bucket — pruning would leave clean buckets with the old
         # file schema (silent truncation on read).
@@ -1214,56 +1047,8 @@ def merge_upsert_partitioned(
             set(dirty)
             | {r[BUCKET_COL] for r in tgt.select(BUCKET_COL).distinct().collect()}
         )
-    data_cols = [
-        c
-        for c in tgt.columns
-        if c not in AUDIT_COLS and c not in (BUCKET_COL, cdc.KEY_COL)
-    ]
-
-    # Partition-pruned target scan: only dirty buckets are read.
-    tgt_dirty = tgt.filter(in_list(BUCKET_COL, dirty))
-    tgt_dirty_k = cdc.ensure_cdc_key(tgt_dirty, key_cols)
-    n_dirty = n_insert + n_update
-    dirty_ops = ops.filter(F.col(cdc.OP_COL) != cdc.SKIP)
-    upd_keys = dirty_ops.filter(F.col(cdc.OP_COL) == cdc.UPDATE).select(cdc.KEY_COL)
-    src_dirty = _fetch_dirty_rows(
-        hashed,
-        dirty_ops,
-        key_cols,
-        n_dirty,
-        carry=[cdc.OP_COL, "row_hash", cdc.KEY_COL, BUCKET_COL],
-    ).cache()
-    untouched = tgt_dirty_k.join(
-        _maybe_broadcast(upd_keys, n_update), cdc.KEY_COL, "left_anti"
-    )
-    tgt_upd = tgt_dirty_k.select(cdc.KEY_COL, "id", "created_at").join(
-        _maybe_broadcast(upd_keys, n_update), cdc.KEY_COL, "left_semi"
-    )
-    updated = (
-        src_dirty.filter(F.col(cdc.OP_COL) == cdc.UPDATE)
-        .join(_maybe_broadcast(tgt_upd, n_update), cdc.KEY_COL)
-        .withColumn("updated_at", F.current_timestamp())
-    )
-    audit = ["row_hash", "id", "created_at", "updated_at", cdc.KEY_COL, BUCKET_COL]
-    new_parts = untouched.select(*data_cols, *audit).unionByName(
-        updated.select(*data_cols, *audit)
-    )
-    if n_insert > 0:
-        # max(id) is a full-target scan — only pay it when inserting.
-        max_id = _max_id_stat(target_path)
-        if max_id is None:
-            max_id = tgt.agg(F.max("id")).collect()[0][0] or 0
-        inserted = with_audit_columns(
-            src_dirty.filter(F.col(cdc.OP_COL) == cdc.INSERT).select(
-                *data_cols, "row_hash", cdc.KEY_COL, BUCKET_COL
-            ),
-            key_cols,
-            id_offset=int(max_id),
-        )
-        new_parts = new_parts.unionByName(inserted.select(*data_cols, *audit))
-
-    # CRASH SAFETY: stage the rebuilt dirty buckets to a sibling temp dir
-    # FIRST (the job reads the live target while computing them — a dynamic
+    # CRASH SAFETY: stage the rebuilt dirty buckets to a temp dir FIRST
+    # (the job reads the live target while computing them — a dynamic
     # partition overwrite of the same path would destroy its own input on a
     # mid-commit failure or stage retry), then swap each _kb= directory
     # into place with two renames. Python exceptions roll back inline; a
@@ -1272,8 +1057,13 @@ def merge_upsert_partitioned(
     # removed after the last — `_recover_interrupted_swap` (run at the top
     # of every merge) completes or rolls back any journaled swap, and the
     # idempotent merge then converges the remaining buckets.
+    src_dirty = None
     staged = _swap_staging_dir(target_path, "merge")
     try:
+        # Partition-pruned target scan: only dirty buckets are read.
+        new_parts, src_dirty = _cow_rows(
+            plan, key_cols, target_path, plan.tgt.filter(in_list(BUCKET_COL, dirty))
+        )
         # One task per dirty bucket → one file per rebuilt bucket dir (see
         # the initial-load comment; keeps target file count == bucket count
         # across arbitrarily many merges), key-sorted like the initial load
@@ -1286,20 +1076,16 @@ def merge_upsert_partitioned(
     finally:
         # Caches release on failure too — a failed merge must not leak
         # persisted frames for the session lifetime.
-        ops.unpersist()
-        src_dirty.unpersist()
+        plan.release()
+        if src_dirty is not None:
+            src_dirty.unpersist()
         # After an INCOMPLETE inline rollback the live journal still
         # references staged (a bucket's only copy may be parked there) —
         # recovery owns the cleanup then.
         if not _staged_is_journaled(target_path, staged):
             shutil.rmtree(staged, ignore_errors=True)
     digest_store.save(target_path, new_dig)
-    return {
-        "insert": n_insert,
-        "update": n_update,
-        "skip": n_skip,
-        "buckets_rewritten": len(dirty),
-    }
+    return {**result, "buckets_rewritten": len(dirty)}
 
 
 @single_writer("target_path")
@@ -1318,32 +1104,22 @@ def merge_upsert_parquet(
     Semantics = reference incremental sync: INSERT new keys, UPDATE changed
     hashes (updated_at refreshed, created_at/id preserved), SKIP identical.
     Never deletes (trap N6). Schema drift (source grew/dropped a column) is
-    absorbed by ``_widen_for_drift``. The default hash scope excludes the
-    audit envelope (mirrors the partitioned variant — audit values must
-    never feed row identity).
+    absorbed by ``merge_plan._widen_for_drift``. The default hash scope
+    excludes the audit envelope (mirrors the partitioned variant — audit
+    values must never feed row identity).
     """
-    _warn_audit_collisions(src)
-    src = _parallelize_scan(src)
     # A crash mid-swap may have left the live dir renamed away — recover
     # BEFORE the existence check, or the merge below would re-run the
     # initial load over a table that still exists (fresh ids/created_at
     # for every row).
     _recover_interrupted_rebucket(target_path)
     if _state_absent(target_path):
-        hashed = (
-            src
-            if "row_hash" in src.columns
-            else cdc.with_row_hash(
-                src, hash_cols or [c for c in src.columns if c not in AUDIT_COLS]
-            )
-        )
         # Persist the normalized _cdc_key alongside row_hash so later
         # syncs read both from parquet instead of recomputing.
-        out = with_audit_columns(cdc.with_cdc_key(hashed, key_cols), key_cols)
-        overwrite_parquet(out, target_path)
-        # Count the WRITTEN files (parquet footer metadata, no recompute) —
-        # counting `out` would re-run the whole hash+normalize plan.
-        n = spark.read.parquet(target_path).count()
+        out = with_audit_columns(
+            cdc.with_cdc_key(hash_source(src, hash_cols), key_cols), key_cols
+        )
+        n = overwrite_and_count(spark, out, target_path)
         return {"insert": n, "update": 0, "skip": 0}
 
     tgt = spark.read.parquet(target_path)
@@ -1353,234 +1129,46 @@ def merge_upsert_parquet(
             "sync it with merge_upsert_partitioned — the flat merge would "
             "silently flatten the pruned layout."
         )
-
-    # ONE narrow classify pass: only (keys, op, hash) is computed and
-    # cached — never the wide source rows. The wide frames for the rewrite
-    # are reconstructed by (usually broadcast) joins of the source /
-    # target against the small dirty-key sets, which re-scan parquet with
-    # pushdown instead of holding a table-sized cache — the only shape
-    # that survives a 100 TB source.
-    src_h = (
-        src
-        if "row_hash" in src.columns
-        else cdc.with_row_hash(
-            src, hash_cols or [c for c in src.columns if c not in AUDIT_COLS]
-        )
+    plan = plan_merge(
+        src, target_path, key_cols, hash_cols,
+        lambda _narrow, _kb: key_hash_view(tgt, key_cols), tgt=tgt,
+        digest_prune=digest_prune, src_digest=src_digest, tgt_digest=tgt_digest,
     )
-    # Pre-persisted-key targets lack _cdc_key; the first change-bearing
-    # merge backfills it via the full-rewrite path.
-    key_migration = cdc.KEY_COL not in tgt.columns
-    src_h, tgt, drifted = _widen_for_drift(src_h, tgt)
-    narrow = cdc.with_cdc_key(src_h.select(*key_cols, "row_hash"), key_cols)
-    t_kh = cdc.ensure_cdc_key(tgt, key_cols).select(
-        F.col(cdc.KEY_COL), F.col("row_hash").alias("_tgt_hash")
-    )
-    # Micro-bucket digest prune (operators/cdc.py): a proven no-change
-    # merge returns before any classify join; a sparse one joins only
-    # the dirty micro-buckets' rows. Skipped under drift/key backfill
-    # (stored hashes cover a different column set — nothing to learn).
-    # The target side comes from the persisted sidecar when its
-    # fingerprint matches the table's listing (sinks/digest_store.py) —
-    # then the compare does ZERO target-side I/O; otherwise one narrow
-    # scan computes it, and the merge saves a fresh sidecar after
-    # publishing so the NEXT sync skips the scan.
-    dirty_mb, clean_skip = (None, 0)
-    tgt_dig = None
-    side_loaded = False
-    if digest_prune and not (drifted or key_migration):
-        # Persisted across digest + classify so the source hash/normalize
-        # runs once whatever the prune decides — small states only (see
-        # DIGEST_PERSIST_MAX_BYTES on the bucketed variant).
-        if _should_persist_narrow(target_path):
-            narrow = narrow.persist()
-        # tgt_digest: caller-validated under the target's writer lock
-        # (replica sync) — see merge_upsert_mor's docstring.
-        side_dig = (
-            tgt_digest
-            if tgt_digest is not None
-            else digest_store.load(target_path)
-        )
-        side_loaded = side_dig is not None
-        dcmp = cdc.digest_compare(
-            narrow.select(cdc.KEY_COL, "row_hash"),
-            None if side_loaded else t_kh,
-            tgt_digest=side_dig,
-            collect_src=side_loaded and _is_tiny_source(src),
-            src_digest=src_digest if side_loaded else None,
-        )
-        dirty_mb, clean_skip = dcmp.dirty, dcmp.clean_src
-        # The kill switch must remove the maintenance cost too (delta
-        # columns in the classify cache + the fold job), not just the
-        # final save.
-        tgt_dig = dcmp.tgt_digest if digest_store.enabled() else None
-    elif digest_store.enabled() and not (drifted or key_migration):
-        # MAINTENANCE WITHOUT PRUNING (decoupled): known-subset merges —
-        # streaming micro-batches — opt out of the digest COMPARE because
-        # their digests are dirty nearly everywhere, but a VALID sidecar
-        # must still be kept valid by folding the classified changes in,
-        # or one trickle batch knocks the next snapshot sync back onto
-        # the full-scan path. Load-only: a stale/absent sidecar stays
-        # that way (a known-subset batch never pays a state scan to
-        # seed one — the next snapshot sync's scan fallback does).
-        tgt_dig = digest_store.load(target_path)
-        side_loaded = tgt_dig is not None
-    if dirty_mb is not None and not dirty_mb:
-        narrow.unpersist()
-        if not side_loaded:
-            digest_store.save(target_path, tgt_dig)
-        return {"insert": 0, "update": 0, "skip": clean_skip}
-    n_cls = narrow
-    if dirty_mb is not None:
-        n_cls = narrow.withColumn("_mb", cdc.micro_bucket()).filter(
-            in_list("_mb", dirty_mb)
-        ).drop("_mb")
-        t_kh = t_kh.withColumn("_mb", cdc.micro_bucket()).filter(
-            in_list("_mb", dirty_mb)
-        ).drop("_mb")
-    else:
-        clean_skip = 0
-    joined = n_cls.join(t_kh, cdc.KEY_COL, "left_outer")
-    op = (
-        F.when(F.col("_tgt_hash").isNull(), F.lit(cdc.INSERT))
-        .when(F.col("row_hash") != F.col("_tgt_hash"), F.lit(cdc.UPDATE))
-        .otherwise(F.lit(cdc.SKIP))
-    )
-    # Sidecar maintenance needs each row's digest-delta fold, which
-    # reads the OLD target hash — project it into the classify cache
-    # while ``_tgt_hash`` is still bound (three 8-byte columns; clean
-    # micro-buckets never reached the join and contribute zero delta).
-    dg_cols = cdc.digest_delta_cols() if tgt_dig is not None else []
-    ops = (
-        joined.withColumn(cdc.OP_COL, op)
-        .select(*key_cols, cdc.KEY_COL, cdc.OP_COL, "row_hash", *dg_cols)
-        .cache()
-    )
-    try:
-        counts = {r["op"]: r["cnt"] for r in cdc.cdc_counts(ops).collect()}
-    finally:
-        narrow.unpersist()
-    n_insert = counts.get(cdc.INSERT, 0)
-    n_update = counts.get(cdc.UPDATE, 0)
-    n_skip = counts.get(cdc.SKIP, 0) + clean_skip
-    data_cols = [c for c in tgt.columns if c not in AUDIT_COLS and c != cdc.KEY_COL]
-
-    if n_insert == 0 and n_update == 0:
+    result = {"insert": plan.insert, "update": plan.update, "skip": plan.skip}
+    if not plan.changed:
         # No-change pass (the idempotency invariant): nothing to write.
         # (Digest-dirty buckets with zero changes = source-missing keys;
         # the flat merge never deletes, so the state — and its digest —
         # is untouched.)
-        ops.unpersist()
-        if tgt_dig is not None and not side_loaded:
-            digest_store.save(target_path, tgt_dig)
-        return {"insert": 0, "update": 0, "skip": n_skip}
-
-    # The merge WILL publish: fold the classified changes into the
-    # digest now (one bounded job off the hot cache), save after the
-    # table write lands so the fingerprint binds digest to files.
-    new_dig = None
-    if tgt_dig is not None:
-        delta = cdc.collect_digest_delta(
-            ops.filter(F.col(cdc.OP_COL) != cdc.SKIP)
-        )
-        if delta is not None:
-            new_dig = digest_store.apply_delta(tgt_dig, delta)
-
-    if n_update == 0 and not drifted and not key_migration:
-        # Insert-only pass — the common incremental shape. Pure append:
-        # no rewrite of existing state at all (the reference's batched
-        # INSERT path, minus its row-at-a-time fallback). Skipped under
-        # drift: appended files would carry the widened schema while old
-        # files keep the narrow one.
-        ins_ops = ops.filter(F.col(cdc.OP_COL) == cdc.INSERT)
-        max_id = _max_id_stat(target_path)
-        if max_id is None:
-            max_id = tgt.agg(F.max("id")).collect()[0][0] or 0
-        inserted = with_audit_columns(
-            _fetch_dirty_rows(
-                src_h, ins_ops, key_cols, n_insert,
-                carry=[cdc.OP_COL, "row_hash", cdc.KEY_COL],
-            ).select(*data_cols, "row_hash", cdc.KEY_COL),
-            key_cols,
-            id_offset=int(max_id),
-        )
-        try:
-            inserted.select(
-                *data_cols, "row_hash", cdc.KEY_COL, "id", "created_at", "updated_at"
-            ).write.mode("append").parquet(target_path)
-        finally:
-            ops.unpersist()
-        digest_store.save(target_path, new_dig)
-        return {"insert": n_insert, "update": 0, "skip": n_skip}
-
-    # Updates present → staged rewrite: unchanged ∪ updated ∪ inserted.
-    tgt_k = cdc.ensure_cdc_key(tgt, key_cols)
-    n_dirty = n_insert + n_update
-    dirty_ops = ops.filter(F.col(cdc.OP_COL) != cdc.SKIP)
-    upd_keys = dirty_ops.filter(F.col(cdc.OP_COL) == cdc.UPDATE).select(cdc.KEY_COL)
-    src_dirty = _fetch_dirty_rows(
-        src_h, dirty_ops, key_cols, n_dirty,
-        carry=[cdc.OP_COL, "row_hash", cdc.KEY_COL],
-    ).cache()
-
-    untouched = tgt_k.join(
-        _maybe_broadcast(upd_keys, n_update), cdc.KEY_COL, "left_anti"
-    )
-
-    # The updated rows' audit identity (id, created_at) comes from the
-    # target — pre-filter that side to just the updated keys so the final
-    # join has a tiny build side.
-    tgt_upd = tgt_k.select(cdc.KEY_COL, "id", "created_at").join(
-        _maybe_broadcast(upd_keys, n_update), cdc.KEY_COL, "left_semi"
-    )
-    updated = (
-        src_dirty.filter(F.col(cdc.OP_COL) == cdc.UPDATE)
-        .join(_maybe_broadcast(tgt_upd, n_update), cdc.KEY_COL)
-        .withColumn("updated_at", F.current_timestamp())
-    )
-
-    out_cols = [*data_cols, "row_hash", cdc.KEY_COL, "id", "created_at", "updated_at"]
-    new_state = untouched.select(*out_cols).unionByName(updated.select(*out_cols))
-
-    if n_insert > 0:
-        max_id = _max_id_stat(target_path)
-        if max_id is None:
-            max_id = tgt.agg(F.max("id")).collect()[0][0] or 0
-        inserted = with_audit_columns(
-            src_dirty.filter(F.col(cdc.OP_COL) == cdc.INSERT).select(
-                *data_cols, "row_hash", cdc.KEY_COL
-            ),
-            key_cols,
-            id_offset=int(max_id),
-        )
-        new_state = new_state.unionByName(inserted.select(*out_cols))
-
-    # Stage to a temp dir, then atomically swap — parquet overwrite of a
-    # path we are also reading would corrupt the source mid-plan.
-    # Journaled whole-dir swap (the old `rmtree(live); replace(tmp, live)`
-    # had a window where a crash — or a failed replace whose finally then
-    # removed tmp — lost the ENTIRE table with the new state stranded in a
-    # random-named sibling no recovery could find).
-    staged = target_path.rstrip("/") + "__rebucket_staged"
-    retired = target_path.rstrip("/") + "__rebucket_retired"
-    shutil.rmtree(staged, ignore_errors=True)
-    shutil.rmtree(retired, ignore_errors=True)
+        plan.release()
+        plan.save_scanned_digest()
+        return result
+    # The merge WILL publish: fold the classified changes into the digest
+    # now, save after the table write lands so the fingerprint binds
+    # digest to files.
+    new_dig = plan.fold_digest()
+    # Insert-only pass — the common incremental shape — is a pure append
+    # (the reference's batched INSERT path). Skipped under drift: appended
+    # files would carry the widened schema while old files keep the
+    # narrow one. Updates present → staged whole-dir rewrite: unchanged ∪
+    # updated ∪ inserted, published through overwrite_parquet's journaled
+    # swap (parquet overwrite of a path the plan also reads would corrupt
+    # its own source).
+    append = plan.update == 0 and not plan.rewrite_all
+    src_dirty = None
     try:
-        new_state.write.mode("overwrite").parquet(staged)
-        _commit_whole_dir_swap(target_path, staged, retired)
+        rows, src_dirty = _cow_rows(
+            plan, key_cols, target_path, None if append else plan.tgt
+        )
+        if append:
+            rows.write.mode("append").parquet(target_path)
+        else:
+            overwrite_parquet(rows, target_path)
     finally:
         # Caches release on failure too — a failed merge must not leak
-        # persisted frames for the session lifetime. A staging-write
-        # failure leaves no journal, so the staged dir is safe to drop;
-        # after the journal exists the swap is recovered forward instead.
-        ops.unpersist()
-        src_dirty.unpersist()
-        if not os.path.exists(
-            target_path.rstrip("/") + REBUCKET_JOURNAL_SUFFIX
-        ):
-            shutil.rmtree(staged, ignore_errors=True)
+        # persisted frames for the session lifetime.
+        plan.release()
+        if src_dirty is not None:
+            src_dirty.unpersist()
     digest_store.save(target_path, new_dig)
-    return {
-        "insert": n_insert,
-        "update": n_update,
-        "skip": n_skip,
-    }
+    return result

@@ -44,6 +44,15 @@ def _state(df):
     return {r["K"]: r["V"] for r in df.select("K", "V").collect()}
 
 
+def _audit(df):
+    """key → audit envelope (id, row_hash, created_at, updated_at)."""
+    return {
+        r["K"]: r.asDict()
+        for r in df.select("K", "id", "row_hash", "created_at", "updated_at")
+        .collect()
+    }
+
+
 class TestDigestComparator:
     def test_identical_sides_all_clean(self, spark):
         from presencia_etl_spark.functions.hashing import with_row_hash
@@ -137,7 +146,7 @@ class TestDigestComparator:
 
 class TestPersistGate:
     def test_du_until_early_exit_and_threshold(self, tmp_path):
-        from presencia_etl_spark.sinks import writers as w
+        from presencia_etl_spark.sinks import merge_plan as w
 
         d = tmp_path / "t"
         d.mkdir()
@@ -152,7 +161,7 @@ class TestPersistGate:
     ):
         """Large-state regime (persist skipped): results must be
         identical — the gate is a cost decision, never a semantic one."""
-        from presencia_etl_spark.sinks import writers as w
+        from presencia_etl_spark.sinks import merge_plan as w
 
         monkeypatch.setattr(w, "DIGEST_PERSIST_MAX_BYTES", 0)
         base = _docs(spark, 300)
@@ -440,7 +449,10 @@ class TestTinySourceCollectPath:
         self, spark, tmp_path
     ):
         """End-to-end through all three merge families with a tiny
-        file-backed source carrying updates + inserts."""
+        file-backed source carrying updates + inserts: same counts, same
+        state, same per-key row_hash, identities kept on update and fresh
+        ids above the old max on insert; then a schema-widening merge the
+        three layouts also agree on."""
         work = tmp_path / "tinymut"
         flat, buck, m = (
             str(work / "flat"), str(work / "buck"), str(work / "mor")
@@ -457,6 +469,11 @@ class TestTinySourceCollectPath:
         srcdir = str(work / "snap")
         _docs(spark, 302, extra_mod=75).write.mode("overwrite").parquet(srcdir)
         src = spark.read.parquet(srcdir)
+        before = {
+            "flat": _audit(spark.read.parquet(flat)),
+            "buck": _audit(spark.read.parquet(buck)),
+            "mor": _audit(mor.read_mor(spark, m)),
+        }
         r1 = merge_upsert_parquet(spark, src, flat, ["K"])
         r2 = merge_upsert_partitioned(spark, src, buck, ["K"], num_buckets=8)
         r3 = mor.merge_upsert_mor(spark, src, m, ["K"], num_buckets=8,
@@ -464,6 +481,140 @@ class TestTinySourceCollectPath:
         # ids 0,75,150,225 update; 300,301 insert (300 is perturbed AND new)
         for r in (r1, r2, r3):
             assert r["insert"] == 2 and r["update"] == 4 and r["skip"] == 296
+        after = {
+            "flat": _audit(spark.read.parquet(flat)),
+            "buck": _audit(spark.read.parquet(buck)),
+            "mor": _audit(mor.read_mor(spark, m)),
+        }
         assert _state(spark.read.parquet(flat)) == _state(src)
         assert _state(spark.read.parquet(buck)) == _state(src)
         assert _state(mor.read_mor(spark, m)) == _state(src)
+        updated, inserted = {"0", "75", "150", "225"}, {"300", "301"}
+        for layout, rows in after.items():
+            old = before[layout]
+            for k in updated:  # identity kept, updated_at moves forward
+                assert rows[k]["id"] == old[k]["id"], (layout, k)
+                assert rows[k]["created_at"] == old[k]["created_at"], (layout, k)
+                assert rows[k]["updated_at"] > old[k]["updated_at"], (layout, k)
+            new_ids = [rows[k]["id"] for k in inserted]
+            assert len(set(new_ids)) == 2, layout
+            assert min(new_ids) > max(r["id"] for r in old.values()), layout
+        hashes = {
+            layout: {k: r["row_hash"] for k, r in rows.items()}
+            for layout, rows in after.items()
+        }
+        assert hashes["flat"] == hashes["buck"] == hashes["mor"]
+
+        # Schema widening: the source gains a column. Every key's hash
+        # covers it, so every row reclassifies as UPDATE on all three
+        # layouts, and the widened column lands everywhere.
+        wide_dir = str(work / "wide")
+        spark.read.parquet(srcdir).withColumn(
+            "W", F.concat(F.col("K"), F.lit("w"))
+        ).write.mode("overwrite").parquet(wide_dir)
+        wide = spark.read.parquet(wide_dir)
+        rw = (
+            merge_upsert_parquet(spark, wide, flat, ["K"]),
+            merge_upsert_partitioned(spark, wide, buck, ["K"], num_buckets=8),
+            mor.merge_upsert_mor(spark, wide, m, ["K"], num_buckets=8,
+                                 compact_every=None),
+        )
+        for r in rw:
+            assert (r["insert"], r["update"], r["skip"]) == (0, 302, 0), r
+        want = {r["K"]: (r["V"], r["W"]) for r in wide.collect()}
+        widened = {
+            "flat": spark.read.parquet(flat),
+            "buck": spark.read.parquet(buck),
+            "mor": mor.read_mor(spark, m),
+        }
+        for layout, df in widened.items():
+            got = {r["K"]: (r["V"], r["W"]) for r in df.collect()}
+            assert got == want, layout
+        wide_hashes = [
+            {r["K"]: r["row_hash"] for r in df.collect()}
+            for df in widened.values()
+        ]
+        assert wide_hashes[0] == wide_hashes[1] == wide_hashes[2]
+
+
+_MERGES = {
+    "flat": lambda spark, src, t: merge_upsert_parquet(spark, src, t, ["K"]),
+    "bucketed": lambda spark, src, t: merge_upsert_partitioned(
+        spark, src, t, ["K"], num_buckets=8
+    ),
+    "mor": lambda spark, src, t: mor.merge_upsert_mor(
+        spark, src, t, ["K"], num_buckets=8, compact_every=None
+    ),
+}
+
+
+def _sparse_docs(spark, n=2000):
+    """``_docs(n)`` with 5 updated keys (1..5) and 3 inserted keys."""
+    df = _docs(spark, n + 3)
+    return df.withColumn(
+        "V",
+        F.when(
+            F.col("K").isin("1", "2", "3", "4", "5"), F.concat("V", F.lit("x"))
+        ).otherwise(F.col("V")),
+    )
+
+
+def _jobs_of(spark, fn):
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup() or [])
+    result = fn()
+    return result, len(set(tracker.getJobIdsForGroup() or []) - before)
+
+
+class TestMergeJobBudget:
+    """Spark job counts of the three merge layouts against a state that
+    carries a digest sidecar: a no-change replay and a sparse merge
+    (5 updates + 3 inserts over 2000 keys, 8 buckets). The budgets are
+    the counts the layouts ran before they shared one classify core;
+    a merge may run fewer jobs, never more."""
+
+    BUDGET = {
+        ("flat", "nochange"): 4,
+        ("flat", "sparse"): 18,
+        ("bucketed", "nochange"): 4,
+        ("bucketed", "sparse"): 19,
+        ("mor", "nochange"): 4,
+        ("mor", "sparse"): 21,
+    }
+    DELETE_KEYS_BUDGET = 16
+
+    @pytest.mark.parametrize("shape", ["nochange", "sparse"])
+    @pytest.mark.parametrize("layout", ["flat", "bucketed", "mor"])
+    def test_merge_job_budget(self, spark, tmp_path, layout, shape):
+        merge = _MERGES[layout]
+        t = str(tmp_path / layout)
+        base = _docs(spark, 2000)
+        merge(spark, base, t)
+        merge(spark, base, t)  # scan-path replay seeds the sidecar
+        assert os.path.exists(os.path.join(t, "_cdc_digest.parquet"))
+        src = base if shape == "nochange" else _sparse_docs(spark)
+        r, n_jobs = _jobs_of(spark, lambda: merge(spark, src, t))
+        want = (0, 0, 2000) if shape == "nochange" else (3, 5, 1995)
+        assert (r["insert"], r["update"], r["skip"]) == want
+        budget = self.BUDGET[(layout, shape)]
+        assert n_jobs <= budget, f"{layout} {shape} merge ran {n_jobs} jobs"
+        print(f"# jobs {layout} {shape}: {n_jobs}")
+
+    def test_delete_keys_mor_job_budget(self, spark, tmp_path):
+        """A 3-key explicit delete: one bounded key fetch, one tombstone
+        delta."""
+        t = str(tmp_path / "mor")
+        base = _docs(spark, 2000)
+        _MERGES["mor"](spark, base, t)
+        _MERGES["mor"](spark, base, t)
+        keys = spark.createDataFrame([("7",), ("8",), ("9",)], ["K"])
+        r, n_jobs = _jobs_of(
+            spark,
+            lambda: mor.delete_keys_mor(
+                spark, t, keys, ["K"], compact_every=None
+            ),
+        )
+        assert r["delete"] == 3
+        assert len(_state(mor.read_mor(spark, t))) == 1997
+        assert n_jobs <= self.DELETE_KEYS_BUDGET, n_jobs
+        print(f"# jobs delete_keys_mor: {n_jobs}")
