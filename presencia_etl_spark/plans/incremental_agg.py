@@ -403,11 +403,6 @@ def refresh_agg_snapshot(
     )
 
 
-# Driver fast-path bounds: the pending change feed must be KB-sized AND
-# the snapshot itself small enough to rewrite with one pyarrow pass.
-AGG_DRIVER_SNAPSHOT_MAX_BYTES = 32 << 20
-
-
 def _snapshot_bytes(agg_path: str) -> int:
     total = 0
     for root, _dirs, files in os.walk(_snap_path(agg_path)):
@@ -465,7 +460,9 @@ def _refresh_agg_driver(
         raise DriverDecline("HLL sketch folds need the JVM", reason="hll")
     if meta.get("kll_cols"):
         raise DriverDecline("KLL sketch folds need the JVM", reason="kll")
-    if _snapshot_bytes(agg_path) > AGG_DRIVER_SNAPSHOT_MAX_BYTES:
+    # the pending change feed must be KB-sized AND the snapshot
+    # itself small enough to rewrite with one pyarrow pass
+    if _snapshot_bytes(agg_path) > dm.DRIVER_REWRITE_MAX_BYTES:
         raise DriverDecline(
             "snapshot too large for a driver rewrite", reason="batch_too_big"
         )

@@ -65,7 +65,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from presencia_etl_spark.plans.incremental_agg import (
-    AGG_DRIVER_SNAPSHOT_MAX_BYTES,
     COUNT_COL,
     META_FILE,
     TRICKLE_DELTA_MAX_BYTES,
@@ -387,7 +386,7 @@ def _refresh_head_driver(
 
     group_cols = meta["group_cols"]
     measure, k, buffer = meta["measure"], meta["k"], meta["buffer"]
-    if _snapshot_bytes(agg_path) > AGG_DRIVER_SNAPSHOT_MAX_BYTES:
+    if _snapshot_bytes(agg_path) > dm.DRIVER_REWRITE_MAX_BYTES:
         raise DriverDecline(
             "agg snapshot too large for a driver probe", reason="batch_too_big"
         )

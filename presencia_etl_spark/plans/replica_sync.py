@@ -306,6 +306,11 @@ def replicate_changes(
         # is the consolidated ``driver_mor.try_trickle``.
         from presencia_etl_spark.sinks import driver_mor as dm
 
+        # one auto-compaction policy for the driver lander's
+        # compaction_due and the Spark-side compact it escalates to:
+        # merge_upsert_mor's defaults, which the Spark feed path runs
+        compact_every = 16
+
         def _feed_driver() -> dict:
             feed_rows = dm.latest_per_key(
                 dm.read_delta_range_rows(source_path, cursor, hist["seq"])
@@ -329,7 +334,10 @@ def replicate_changes(
             dels = [
                 r[_cdc.KEY_COL] for r in feed_rows.values() if r[_DEL]
             ]
-            return dm.trickle_merge(target_path, ups, key_cols, delete_keys=dels)
+            return dm.trickle_merge(
+                target_path, ups, key_cols, delete_keys=dels,
+                compact_every=compact_every,
+            )
 
         def _compact() -> None:
             nonlocal spark
@@ -338,9 +346,12 @@ def replicate_changes(
 
                 spark = get_spark(app_name="replicate-changes")
                 spark.sparkContext.setLogLevel("ERROR")
-            from presencia_etl_spark.sinks.mor import compact_mor
+            from presencia_etl_spark.sinks.mor import _auto_keep_last, compact_mor
 
-            compact_mor(spark, target_path)
+            # keep the consumer window, never fold it all
+            compact_mor(
+                spark, target_path, keep_last=_auto_keep_last(compact_every, None)
+            )
 
         r = dm.try_trickle(
             _feed_driver,

@@ -1,42 +1,58 @@
-"""Zero-Spark-job MOR operations for KB-sized change batches.
+"""Zero-Spark-job merges for KB-sized change batches: the driver plane
+of the public bucketed merges.
 
 The steady state of a maintained view / cron CDC loop is a HANDFUL of
 changed rows per tick; running them through the full Spark merge costs a
-fixed ~15-job cascade (classify collects, identity fetch, delta write,
-digest fold) regardless of size — sf0.1 measured a 1-key maintained-view
-refresh at ~35 jobs / 5.7 s against a 5.0 s rebuild. This module is the
-admit-loop discipline (``operators/dedup_index._register_collected``)
-applied to the MOR sink itself: when the pending change set is tiny and
-every column type is driver-renderable, the WHOLE merge runs on the
-driver with pyarrow — point reads pruned to the affected ``_kb=``
-buckets' files, classification and digest folds in Python
-(``functions/driver_parity`` — bit parity with the Spark expressions,
-differential-tested), one parquet file committed through the exact same
-staging-dir + ``os.rename`` protocol as ``mor._commit_delta``. Zero
-Spark jobs; the JVM is touched only via py4j for the rare double value
-outside the proven rendering region.
+fixed cascade of ~20 jobs (classify collects, identity fetch, landing
+write, digest fold) whatever the size. Here the WHOLE merge runs on the
+driver with pyarrow instead, in one core and two landers — the driver
+twin of ``sinks/merge_plan.plan_merge`` and its Spark landers:
+
+- ``plan_batch`` — THE driver classify: key/hash/bucket per row
+  (``functions/driver_parity``: bit parity with the Spark expressions,
+  differential-tested), a point read of the live rows pruned to the
+  affected ``_kb=`` buckets' files, INSERT/UPDATE/SKIP, update identity
+  carried over, insert ids from footer stats, the digest-sidecar fold;
+- ``trickle_merge`` — the MOR lander: one key-sorted delta file
+  committed through the exact staging-dir + ``os.rename`` protocol of
+  ``mor._commit_delta`` (upserts and tombstones, one sequence);
+- ``trickle_merge_bucketed`` — the bucketed-COW lander: each dirty
+  bucket rewritten as one key-sorted file in Spark's column order and
+  published through the same journaled ``writers.swap_bucket_dirs``.
+
+``merge_local`` is the route: ``mor.merge_upsert_mor`` and
+``writers.merge_upsert_partitioned`` hand it their source, and a
+driver-local frame (``local_rows``: a ``LocalRelation`` of at most
+``DRIVER_BATCH_MAX_KEYS`` rows, e.g. ``createDataFrame`` over pandas or
+arrow) lands here through ``try_trickle``, the one gate every zero-job
+path shares (the replication feed and the view refreshes call the MOR
+lander with rows they read driver-side). Zero Spark jobs; the JVM is
+touched only via py4j for the rare double value outside the proven
+rendering region.
 
 The resulting state is indistinguishable from a Spark-path merge: same
-delta layout (key-sorted file under ``deltas/_delta_seq=N``), same audit
-columns, same sidecar algebra (load → fold → save after publish, with
-the duplicate-key stand-down). ``tests/test_driver_mor.py`` asserts
-bit-level equivalence (row hashes, digests, read_mor content) against
-the Spark merge over randomized sequences, and that Spark merges /
+layout (key-sorted files, Spark's column order), same audit columns,
+same sidecar algebra (load → fold → save after publish).
+``tests/test_driver_mor.py`` asserts bit-level equivalence (row hashes,
+digests, live content) against the Spark merge over randomized
+sequences, through the public merges too, and that Spark merges /
 compactions / change-feed reads compose transparently on top of
-driver-written deltas.
+driver-written files.
 
 Anything this path cannot reproduce exactly — unsupported column types,
-schema drift, a crash journal needing Spark-side repair, a fileless
-base, oversized batches — raises ``DriverDecline`` and the caller runs
-the ordinary Spark merge. Declines trade speed, never correctness.
+schema or type drift, a crash journal needing Spark-side repair, a
+fileless base, duplicate batch keys, oversized batches or buckets —
+raises ``DriverDecline`` and the caller runs the ordinary Spark merge.
+Declines trade speed, never correctness.
 
 Scale note: "driver-side" here is not a single-node shortcut — it is
 the metadata plane of a 100 TB deployment. The point reads touch
 O(changed keys) row groups via footer stats (the files are key-sorted
-precisely for this), the digest sidecar is ≤16K rows, and the commit
-writes one small file; none of that grows with table size. An
-object-store port swaps the ``os.rename`` publish exactly as
-``mor._commit_delta`` does (docs/SCALE.md).
+precisely for this), the digest sidecar is ≤16K rows, a MOR commit
+writes one small file, and a COW rewrite is bounded by
+``DRIVER_REWRITE_MAX_BYTES`` of dirty buckets. An object-store port
+swaps the ``os.rename`` publish exactly as ``mor._commit_delta`` does
+(docs/SCALE.md).
 """
 
 from __future__ import annotations
@@ -44,8 +60,11 @@ from __future__ import annotations
 import datetime
 import glob
 import os
+import shutil
 import threading
+import uuid
 import warnings
+from dataclasses import dataclass, field
 
 from presencia_etl_spark.functions import driver_parity as dp
 from presencia_etl_spark.operators import cdc
@@ -69,7 +88,10 @@ from presencia_etl_spark.sinks.writers import (
     BUCKET_COL,
     MERGE_JOURNAL,
     _max_id_stat,
+    _staged_is_journaled,
+    _swap_staging_dir,
     is_spark_hidden,
+    swap_bucket_dirs,
 )
 
 # A driver merge past this many affected keys would stop being the
@@ -80,11 +102,15 @@ from presencia_etl_spark.sinks.writers import (
 # carries at most one key, so rows ≤ bound ⇒ keys ≤ bound; the r11
 # 2048-row cap was an unjustified second constant).
 DRIVER_BATCH_MAX_KEYS = 4096
+# The bytes a driver lander may read and rewrite in one pyarrow pass
+# (the maintained agg snapshot, a bucketed-COW tick's dirty buckets):
+# past it the rewrite is corpus-shaped and belongs on the executors.
+DRIVER_REWRITE_MAX_BYTES = 32 << 20
 
 
 def trickle_enabled() -> bool:
     """The driver-plane kill switch — one env knob for every zero-job
-    trickle path (micro-batch merge, replication feed, view/agg
+    trickle path (the public bucketed merges, replication feed, view/agg
     refresh). ``SPARK_GRAFT_DRIVER_TRICKLE=0`` forces the Spark paths."""
     return os.environ.get("SPARK_GRAFT_DRIVER_TRICKLE", "1") != "0"
 
@@ -134,8 +160,8 @@ def try_trickle(
     on_failure=None,
 ):
     """THE trickle gate — the one code path deciding driver-vs-Spark for
-    every zero-job fast path (micro-batch merge, replication feed
-    catch-up, maintained-view refresh). Owns, in order:
+    every zero-job fast path (the public bucketed merges, replication
+    feed catch-up, maintained-view refresh). Owns, in order:
 
     1. size bound — ``pending_bytes > max_bytes`` is the corpus shape,
        not a decline (FS-metadata decision, per the CLAUDE.md rule);
@@ -287,19 +313,25 @@ def check_batch_kinds(rows: list[dict], kinds: dict[str, str]) -> None:
 
 
 def table_kinds(path: str) -> dict[str, str]:
-    """Column → renderer kind for a MOR state, from one parquet footer
-    (base preferred, else a delta). Raises ``DriverDecline`` when any
-    column's type has no exact driver-side rendering."""
+    """Column → renderer kind for the state at ``path``, from one parquet
+    footer (a MOR state's base preferred, else a delta; else any file —
+    the bucketed COW layout). Raises ``DriverDecline`` when any column's
+    type has no exact driver-side rendering."""
     import pyarrow.parquet as pq
 
-    f = _any_parquet(os.path.join(path, BASE_DIR)) or _any_parquet(
-        os.path.join(path, DELTA_DIR)
+    f = (
+        _any_parquet(os.path.join(path, BASE_DIR))
+        or _any_parquet(os.path.join(path, DELTA_DIR))
+        or _any_parquet(path)
     )
     if f is None:
         raise DriverDecline(
             f"{path!r}: no parquet footers to type from", reason="no_footers"
         )
-    sch = pq.read_schema(f)
+    return _schema_kinds(pq.read_schema(f))
+
+
+def _schema_kinds(sch) -> dict[str, str]:
     return {name: _kind_of(sch.field(name).type) for name in sch.names}
 
 
@@ -430,32 +462,31 @@ def read_live_rows_for_keys(
         if not r[DELETED_COL]
     }
     base_keys = [k for k in keyset if k not in decided]
-    if base_keys:
-        meta_nb = meta["num_buckets"]
-        # ONE dataset read over the union of the keys' bucket files
-        # (r14): the per-bucket loop issued one pads.dataset+to_table
-        # per dirty bucket (~6-9 ms each, serial — 0.6 s of a KB tick
-        # touching 67 buckets); a single scan over the same pruned file
-        # list applies the one In(keys) filter with arrow's internal
-        # fragment parallelism and identical row-group skipping. Rows
-        # only ever live in their own pmod bucket, so the global key
-        # filter matches exactly what the per-bucket subsets did, and
-        # the bucket column is recomputed from the key (the layout
-        # invariant the dirs encode).
-        files = []
-        for b in sorted({dp.pmod_bucket(k, meta_nb) for k in base_keys}):
-            bdir = os.path.join(path, BASE_DIR, f"{BUCKET_COL}={b}")
-            if not os.path.isdir(bdir):
-                continue
-            files += [
-                f
-                for f in glob.glob(os.path.join(bdir, "*.parquet"))
-                if not is_spark_hidden(os.path.basename(f))
-            ]
-        if files:
-            for r in _to_rows(_read_filtered(files, base_keys)):
-                r[BUCKET_COL] = dp.pmod_bucket(r[cdc.KEY_COL], meta_nb)
-                out[r[cdc.KEY_COL]] = r
+    out.update(_bucket_rows(os.path.join(path, BASE_DIR), base_keys, meta["num_buckets"]))
+    return out
+
+
+def _bucket_rows(root: str, keys: list[str], num_buckets: int) -> dict[str, dict]:
+    """The rows of ``keys`` in a ``_kb=`` bucketed layout at ``root``.
+    ONE dataset read over the union of the keys' bucket files (r14): the
+    per-bucket loop issued one pads.dataset+to_table per dirty bucket
+    (~6-9 ms each, serial — 0.6 s of a KB tick touching 67 buckets); a
+    single scan over the same pruned file list applies the one In(keys)
+    filter with arrow's internal fragment parallelism and identical
+    row-group skipping. Rows only ever live in their own pmod bucket, so
+    the global key filter matches exactly what the per-bucket subsets
+    did, and the bucket column is recomputed from the key (the layout
+    invariant the dirs encode)."""
+    files = [
+        f
+        for b in sorted({dp.pmod_bucket(k, num_buckets) for k in keys})
+        for f in _bucket_files(root, b)
+    ]
+    out: dict[str, dict] = {}
+    if files:
+        for r in _to_rows(_read_filtered(files, keys)):
+            r[BUCKET_COL] = dp.pmod_bucket(r[cdc.KEY_COL], num_buckets)
+            out[r[cdc.KEY_COL]] = r
     return out
 
 
@@ -518,7 +549,174 @@ def commit_delta_rows(path: str, rows: list[dict]) -> int:
 
 
 # --------------------------------------------------------------------------
-# The trickle merge
+# The classify core
+# --------------------------------------------------------------------------
+
+
+def _data_cols(kinds: dict[str, str]) -> list[str]:
+    return [
+        c
+        for c in kinds
+        if c not in AUDIT_COLS
+        and c not in (BUCKET_COL, cdc.KEY_COL, SEQ_COL, DELETED_COL)
+    ]
+
+
+def _max_id(*roots: str) -> int:
+    """max(id) over the footer stats of ``roots``; the first (the base
+    layout) must carry them, later ones (a delta dir) may be empty."""
+    ids = [_max_id_stat(r) for r in roots]
+    if ids[0] is None:
+        raise DriverDecline("base lacks id footer stats", reason="no_id_stats")
+    return int(max(i for i in ids if i is not None))
+
+
+@dataclass
+class DriverPlan:
+    """A classified driver-side batch — the driver twin of
+    ``merge_plan.MergePlan``. ``rows`` are the change rows in the state's
+    layout (data + audit + ``_cdc_key`` + ``_kb`` + ``_deleted``):
+    inserts with fresh ids, updates carrying their current
+    ``id``/``created_at``, tombstones with the victim's last image.
+    ``digest`` is the folded sidecar digest to save after the publish
+    (None: no valid sidecar to keep)."""
+
+    insert: int = 0
+    update: int = 0
+    skip: int = 0
+    delete: int = 0
+    rows: list[dict] = field(default_factory=list)
+    digest: dict | None = None
+
+    @property
+    def changed(self) -> bool:
+        return self.insert + self.update + self.delete > 0
+
+
+def plan_batch(
+    path: str,
+    kinds: dict[str, str],
+    upserts: list[dict],
+    key_cols: list[str],
+    *,
+    live_rows,
+    num_buckets: int,
+    id_roots: tuple[str, ...],
+    hash_cols: list[str] | None = None,
+    delete_keys: list[str] | None = None,
+    jvm=None,
+) -> DriverPlan:
+    """Classify a KB-sized batch against the state at ``path``, driver-
+    side: key/hash/bucket per row, a point read of the live rows
+    (``live_rows(keys) -> {key: row}``, the layout's reader),
+    INSERT/UPDATE/SKIP, update identity carried from the current row,
+    insert ids allocated past the footer-stats max of ``id_roots``,
+    tombstones for the live ``delete_keys``, and the digest sidecar
+    fold. Raises ``DriverDecline`` for anything it can't reproduce
+    exactly."""
+    data_cols = _data_cols(kinds)
+    if upserts:
+        # a batch may carry PRE-COMPUTED row_hash/_cdc_key (the
+        # replication feed: hashes were computed over the source's RAW
+        # strings and must be trusted, never recomputed over typed
+        # values — cdc_classify's trust rule)
+        batch_cols = set(upserts[0]) - {"row_hash", cdc.KEY_COL}
+        if batch_cols != set(data_cols):
+            raise DriverDecline(
+                f"schema drift: batch columns {sorted(batch_cols)} != "
+                f"state data columns {sorted(data_cols)}",
+                reason="schema_drift",
+            )
+        check_batch_kinds(upserts, kinds)
+    hcols = hash_cols or data_cols
+    key_kinds = [kinds[c] for c in key_cols]
+
+    # hash + key + bucket, the Spark merge's `keyed` frame in Python
+    staged = []
+    try:
+        for row in upserts:
+            k = row.get(cdc.KEY_COL) or dp.composite_key(
+                [row[c] for c in key_cols], key_kinds, jvm
+            )
+            h = row.get("row_hash") or dp.row_hash_value(
+                row, hcols, kinds, "sha256", jvm
+            )
+            staged.append((k, h, row))
+    except dp.UnsupportedValue as e:
+        # a value outside the proven rendering region with no JVM
+        # gateway — the Spark path renders it exactly
+        raise DriverDecline(str(e), reason="unrenderable") from e
+    up_keys = {k for k, _h, _r in staged}
+    if len(up_keys) < len(staged):
+        raise DriverDecline(
+            "duplicate keys within the batch — the Spark merge's "
+            "arbitrary-winner semantics aren't reproduced here",
+            reason="duplicate_keys",
+        )
+    # keys the batch also upserts are ignored (the upsert wins); the
+    # change rows therefore carry each key at most once
+    del_keys = [k for k in dict.fromkeys(delete_keys or []) if k not in up_keys]
+
+    current = live_rows(sorted(up_keys | set(del_keys)))
+    plan = DriverPlan()
+    now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+    digest_delta: list[tuple[int, int, int, int]] = []
+    for k, h, row in staged:
+        cur = current.get(k)
+        mb = dp.xxhash64_str(k) % cdc.DIGEST_MICRO_BUCKETS
+        if cur is None:
+            plan.insert += 1
+        elif cur["row_hash"] != h:
+            plan.update += 1
+        else:
+            plan.skip += 1
+            continue
+        rec = dict(row)
+        rec["row_hash"] = h
+        rec[cdc.KEY_COL] = k
+        rec[BUCKET_COL] = dp.pmod_bucket(k, num_buckets)
+        rec["updated_at"] = now
+        rec[DELETED_COL] = False
+        h1n, h2n = dp.fold_pair(k, h)
+        if cur is None:
+            digest_delta.append((mb, 1, h1n, h2n))
+        else:
+            rec["id"] = cur["id"]
+            rec["created_at"] = cur["created_at"]
+            h1o, h2o = dp.fold_pair(k, cur["row_hash"])
+            digest_delta.append((mb, 0, h1n ^ h1o, h2n ^ h2o))
+        plan.rows.append(rec)
+    for k in del_keys:
+        cur = current.get(k)
+        if cur is None:
+            continue  # not live: an idempotent replay
+        plan.delete += 1
+        plan.rows.append({**cur, "updated_at": now, DELETED_COL: True})
+        h1o, h2o = dp.fold_pair(k, cur["row_hash"])
+        digest_delta.append(
+            (dp.xxhash64_str(k) % cdc.DIGEST_MICRO_BUCKETS, -1, h1o, h2o)
+        )
+    if not plan.changed:
+        return plan
+
+    if plan.insert:
+        nxt = _max_id(*id_roots)
+        for rec in plan.rows:
+            if "id" not in rec:
+                nxt += 1
+                rec["id"] = nxt
+                rec["created_at"] = now
+    # digest maintenance mirrors the Spark merge: load-only (never
+    # seeds), loaded before anything is staged, saved by the lander
+    # strictly after its publish
+    tgt_dig = digest_store.load(path)
+    if tgt_dig is not None:
+        plan.digest = digest_store.apply_delta(tgt_dig, digest_delta)
+    return plan
+
+
+# --------------------------------------------------------------------------
+# The MOR lander: one delta file
 # --------------------------------------------------------------------------
 
 
@@ -534,9 +732,7 @@ def trickle_merge(
     """``merge_upsert_mor(..., delete_keys=...)`` for a KB-sized batch,
     entirely driver-side. ``upserts`` are data-column dicts (no audit
     columns); ``delete_keys`` are already-normalized ``_cdc_key``
-    strings. Classifies by point read, keeps update identity
-    (id/created_at) from the current row, allocates insert ids from
-    footer stats, folds the digest sidecar, and commits upserts +
+    strings. Classifies through ``plan_batch`` and commits upserts +
     tombstones as ONE atomic delta sequence. Raises ``DriverDecline``
     for anything it can't reproduce exactly (caller falls back to the
     Spark merge). Auto-compaction is NOT run here — the returned
@@ -561,158 +757,339 @@ def trickle_merge(
             raise DriverDecline(
                 "fileless base needs Spark-side recovery", reason="fileless_base"
             )
-        kinds = table_kinds(path)
-        data_cols = [
-            c
-            for c in kinds
-            if c not in AUDIT_COLS
-            and c not in (BUCKET_COL, cdc.KEY_COL, SEQ_COL, DELETED_COL)
-        ]
-        if upserts:
-            # a batch may carry PRE-COMPUTED row_hash/_cdc_key (the
-            # replication feed: hashes were computed over the source's
-            # RAW strings and must be trusted, never recomputed over
-            # typed values — cdc_classify's trust rule)
-            batch_cols = set(upserts[0]) - {"row_hash", cdc.KEY_COL}
-            if batch_cols != set(data_cols):
-                raise DriverDecline(
-                    f"schema drift: batch columns {sorted(batch_cols)} != "
-                    f"state data columns {sorted(data_cols)}",
-                    reason="schema_drift",
-                )
-            check_batch_kinds(upserts, kinds)
-        hcols = hash_cols or data_cols
-        key_kinds = [kinds[c] for c in key_cols]
-
-        # hash + key + bucket, the Spark merge's `keyed` frame in Python
-        staged = []
-        try:
-            for row in upserts:
-                k = row.get(cdc.KEY_COL) or dp.composite_key(
-                    [row[c] for c in key_cols], key_kinds, jvm
-                )
-                h = row.get("row_hash") or dp.row_hash_value(
-                    row, hcols, kinds, "sha256", jvm
-                )
-                staged.append((k, h, row))
-        except dp.UnsupportedValue as e:
-            # a value outside the proven rendering region with no JVM
-            # gateway — the Spark path renders it exactly
-            raise DriverDecline(str(e), reason="unrenderable") from e
-        up_keys = {k for k, _h, _r in staged}
-        if len(up_keys) < len(staged):
-            raise DriverDecline(
-                "duplicate keys within the batch — the Spark merge's "
-                "arbitrary-winner semantics aren't reproduced here",
-                reason="duplicate_keys",
-            )
-        del_keys = [k for k in dict.fromkeys(delete_keys) if k not in up_keys]
-
-        current = read_live_rows_for_keys(
-            path, sorted(up_keys | set(del_keys))
+        plan = plan_batch(
+            path, table_kinds(path), upserts, key_cols,
+            live_rows=lambda keys: read_live_rows_for_keys(path, keys),
+            num_buckets=meta["num_buckets"],
+            id_roots=(os.path.join(path, BASE_DIR), os.path.join(path, DELTA_DIR)),
+            hash_cols=hash_cols, delete_keys=delete_keys, jvm=jvm,
         )
-        n_insert = n_update = n_skip = 0
-        now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
-        out_rows: list[dict] = []
-        digest_delta: list[tuple[int, int, int, int]] = []
-        for k, h, row in staged:
-            cur = current.get(k)
-            mb = dp.xxhash64_str(k) % cdc.DIGEST_MICRO_BUCKETS
-            if cur is None:
-                n_insert += 1
-                op = cdc.INSERT
-            elif cur["row_hash"] != h:
-                n_update += 1
-                op = cdc.UPDATE
-            else:
-                n_skip += 1
-                continue
-            rec = dict(row)
-            rec["row_hash"] = h
-            rec[cdc.KEY_COL] = k
-            rec[BUCKET_COL] = dp.pmod_bucket(k, meta["num_buckets"])
-            rec["updated_at"] = now
-            if op == cdc.UPDATE:
-                rec["id"] = cur["id"]
-                rec["created_at"] = cur["created_at"]
-            rec[DELETED_COL] = False
-            out_rows.append(rec)
-            h1n, h2n = dp.fold_pair(k, h)
-            if op == cdc.INSERT:
-                digest_delta.append((mb, 1, h1n, h2n))
-            else:
-                h1o, h2o = dp.fold_pair(k, cur["row_hash"])
-                digest_delta.append((mb, 0, h1n ^ h1o, h2n ^ h2o))
-        victims = [
-            current[k] for k in del_keys if k in current
-        ]
-        for cur in victims:
-            k = cur[cdc.KEY_COL]
-            rec = dict(cur)
-            rec["updated_at"] = now
-            rec[DELETED_COL] = True
-            out_rows.append(rec)
-            h1o, h2o = dp.fold_pair(k, cur["row_hash"])
-            digest_delta.append(
-                (dp.xxhash64_str(k) % cdc.DIGEST_MICRO_BUCKETS, -1, h1o, h2o)
-            )
-        n_delete = len(victims)
-
-        if n_insert + n_update + n_delete == 0:
-            return {
-                "insert": 0, "update": 0, "skip": n_skip, "delete": 0,
-                "delta_files": 0, "compacted": False, "compaction_due": False,
-                "driver": True,
-            }
-
-        if n_insert:
-            max_id = _max_id_stat(os.path.join(path, BASE_DIR))
-            d_max = _max_id_stat(os.path.join(path, DELTA_DIR))
-            if max_id is None:
-                raise DriverDecline(
-                    "base lacks id footer stats", reason="no_id_stats"
-                )
-            if d_max is not None:
-                max_id = max(max_id, d_max)
-            nxt = int(max_id)
-            for rec in out_rows:
-                if not rec[DELETED_COL] and "id" not in rec:
-                    nxt += 1
-                    rec["id"] = nxt
-                    rec["created_at"] = now
-
-        # digest maintenance mirrors the Spark merge: load-only (never
-        # seeds), duplicate-key stand-down, save strictly after publish.
-        new_dig = None
-        if digest_store.enabled():
-            seen: set[str] = set()
-            dup = False
-            for rec in out_rows:
-                if rec[cdc.KEY_COL] in seen:
-                    dup = True
-                    break
-                seen.add(rec[cdc.KEY_COL])
-            tgt_dig = digest_store.load(path)
-            if tgt_dig is not None and not dup:
-                new_dig = digest_store.apply_delta(tgt_dig, digest_delta)
-            elif tgt_dig is not None and dup:
-                warnings.warn(
-                    "digest sidecar maintenance skipped: duplicate keys "
-                    "among the change rows"
-                )
-
-        commit_delta_rows(path, out_rows)
-        digest_store.save(path, new_dig)
-        return {
-            "insert": n_insert,
-            "update": n_update,
-            "skip": n_skip,
-            "delete": n_delete,
-            "delta_files": 1,
-            "compacted": False,
-            "compaction_due": (
-                compact_every is not None
-                and len(_delta_seqs(path)) >= compact_every
-            ),
-            "driver": True,
+        result = {
+            "insert": plan.insert, "update": plan.update, "skip": plan.skip,
+            "delete": plan.delete, "delta_files": 0, "compacted": False,
+            "compaction_due": False, "driver": True,
         }
+        if not plan.changed:
+            return result
+        commit_delta_rows(path, plan.rows)
+        digest_store.save(path, plan.digest)
+        result["delta_files"] = 1
+        result["compaction_due"] = (
+            compact_every is not None and len(_delta_seqs(path)) >= compact_every
+        )
+        return result
+
+
+# --------------------------------------------------------------------------
+# The bucketed-COW lander: one key-sorted file per dirty bucket
+# --------------------------------------------------------------------------
+
+# The bucket files' column order after a rewrite — the order the Spark
+# lander (``writers._cow_rows``) and the initial load write.
+_COW_TAIL = ("row_hash", cdc.KEY_COL, "id", "created_at", "updated_at")
+
+
+def _bucket_files(root: str, b: int) -> list[str]:
+    bdir = os.path.join(root, f"{BUCKET_COL}={b}")
+    if not os.path.isdir(bdir):
+        return []
+    return sorted(
+        f
+        for f in glob.glob(os.path.join(bdir, "*.parquet"))
+        if not is_spark_hidden(os.path.basename(f))
+    )
+
+
+def _cow_schema(files: list[str], data_cols: list[str], fallback):
+    """The arrow schema a rewritten bucket file carries: its current
+    file's column types in Spark's rewrite order (data columns, then
+    ``_COW_TAIL``), Spark's row metadata dropped like the delta commit's.
+    A fully emptied (or absent) bucket takes ``fallback``'s. Several
+    files of differing schemas decline."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schemas = [pq.read_schema(f) for f in files] or [fallback]
+    if any(not s.equals(schemas[0]) for s in schemas[1:]):
+        raise DriverDecline(
+            "bucket files of differing schemas", reason="schema_drift"
+        )
+    return pa.schema([schemas[0].field(c) for c in (*data_cols, *_COW_TAIL)])
+
+
+def trickle_merge_bucketed(
+    path: str,
+    upserts: list[dict],
+    key_cols: list[str],
+    num_buckets: int,
+    hash_cols: list[str] | None = None,
+    jvm=None,
+) -> dict:
+    """``writers.merge_upsert_partitioned`` for a KB-sized batch, entirely
+    driver-side: classify through ``plan_batch``, then rewrite each dirty
+    bucket with pyarrow — its files minus the changed keys, plus the new
+    rows, key-sorted, one INT96/snappy file — staged in the target and
+    published through the journaled ``swap_bucket_dirs``; the digest
+    sidecar is saved strictly after the publish. Declines a target
+    without a persisted ``_cdc_key`` (the Spark path's one-time backfill
+    rewrites every bucket), schema or type drift, a live swap journal,
+    duplicate batch keys and oversized batches or buckets. A swap whose
+    inline rollback is incomplete raises ``RuntimeError``, never a
+    decline: the journal's recovery must run before any other merge."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    if os.path.exists(os.path.join(path, MERGE_JOURNAL)):
+        raise DriverDecline(
+            "interrupted bucket swap needs Spark-side repair", reason="journal"
+        )
+    if len(upserts) > DRIVER_BATCH_MAX_KEYS:
+        raise DriverDecline(
+            "batch exceeds the driver point-read bound", reason="batch_too_big"
+        )
+    with state_lock(path):
+        ref = _any_parquet(path)
+        if ref is None:
+            raise DriverDecline(
+                f"{path!r}: no parquet footers to type from", reason="no_footers"
+            )
+        if not os.path.basename(os.path.dirname(ref)).startswith(f"{BUCKET_COL}="):
+            # a flat state: the Spark path owns the layout error
+            raise DriverDecline(f"{path!r} is not bucketed", reason="not_bucketed")
+        ref_schema = pq.read_schema(ref)
+        kinds = _schema_kinds(ref_schema)
+        if cdc.KEY_COL not in kinds:
+            raise DriverDecline(
+                "target lacks a persisted _cdc_key (Spark-side backfill)",
+                reason="no_cdc_key",
+            )
+        plan = plan_batch(
+            path, kinds, upserts, key_cols,
+            live_rows=lambda keys: _bucket_rows(path, keys, num_buckets),
+            num_buckets=num_buckets, id_roots=(path,), hash_cols=hash_cols,
+            jvm=jvm,
+        )
+        result = {
+            "insert": plan.insert, "update": plan.update, "skip": plan.skip,
+            "buckets_rewritten": 0, "driver": True,
+        }
+        if not plan.changed:
+            return result
+        by_bucket: dict[int, list[dict]] = {}
+        for rec in plan.rows:
+            by_bucket.setdefault(rec[BUCKET_COL], []).append(rec)
+        files = {b: _bucket_files(path, b) for b in by_bucket}
+        if sum(os.path.getsize(f) for fs in files.values() for f in fs) > (
+            DRIVER_REWRITE_MAX_BYTES
+        ):
+            raise DriverDecline(
+                "dirty buckets exceed the driver rewrite bound",
+                reason="batch_too_big",
+            )
+        data_cols = _data_cols(kinds)
+        staged = _swap_staging_dir(path, "merge")
+        try:
+            for b, recs in sorted(by_bucket.items()):
+                sch = _cow_schema(files[b], data_cols, ref_schema)
+                new = pa.Table.from_pydict(
+                    {c: [r[c] for r in recs] for c in sch.names}, schema=sch
+                )
+                parts = [new]
+                if files[b]:
+                    cur = _read_filtered(files[b], None, columns=sch.names)
+                    changed = pa.array([r[cdc.KEY_COL] for r in recs])
+                    keep = cur.filter(pc.invert(pc.is_in(cur[cdc.KEY_COL], changed)))
+                    parts.insert(0, keep.cast(sch))
+                out = pa.concat_tables(parts).sort_by(cdc.KEY_COL)
+                bdir = os.path.join(staged, f"{BUCKET_COL}={b}")
+                os.makedirs(bdir)
+                pq.write_table(
+                    out,
+                    os.path.join(bdir, f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"),
+                    use_deprecated_int96_timestamps=True,  # Spark's INT96 layout
+                    compression="snappy",
+                )
+            try:
+                swap_bucket_dirs(staged, path, sorted(by_bucket))
+            except OSError as e:
+                if getattr(e, "swap_rolled_back", True):
+                    raise  # target untouched or fully rolled back
+                # A bucket may now be missing from the target, its only
+                # copy parked in `staged` and named by the live journal.
+                # The gate must not swallow this into the Spark path:
+                # that merge would classify the missing bucket's keys as
+                # fresh INSERTs and its swap would overwrite the journal.
+                # The error reaches the caller; the next merge's
+                # _recover_interrupted_swap repairs the bucket.
+                raise RuntimeError(
+                    f"{path!r}: bucket swap failed and its inline rollback "
+                    "is incomplete; the next merge repairs it from the journal"
+                ) from e
+        finally:
+            # after an INCOMPLETE inline rollback the live journal still
+            # references staged — recovery owns the cleanup then
+            if not _staged_is_journaled(path, staged):
+                shutil.rmtree(staged, ignore_errors=True)
+        digest_store.save(path, plan.digest)
+        return {**result, "buckets_rewritten": len(by_bucket)}
+
+
+# --------------------------------------------------------------------------
+# The public merges' route
+# --------------------------------------------------------------------------
+
+# Spark SQL type → renderer kind, for a source frame's declared columns.
+_SPARK_KINDS = {
+    "string": "string",
+    "tinyint": "int8",
+    "smallint": "int16",
+    "int": "int32",
+    "bigint": "int64",
+    "boolean": "bool",
+    "double": "double",
+    "date": "date",
+    "timestamp": "timestamp",
+}
+
+
+def check_source_kinds(
+    src_kinds: dict[str, str | None], kinds: dict[str, str], cols
+) -> None:
+    """Raise ``DriverDecline`` unless every column in ``cols`` renders the
+    same way from the source's Spark type as from the target's: the same
+    kind, or two integral kinds (Spark renders int and bigint alike)."""
+    for c in cols:
+        s, t = src_kinds.get(c), kinds[c]
+        if s is None:
+            raise DriverDecline(
+                f"source column {c!r} has no driver-side rendering",
+                reason="unsupported_type",
+            )
+        if s != t and not (s in _INT_KINDS and t in _INT_KINDS):
+            raise DriverDecline(
+                f"type drift: source column {c!r} is {s!r}, target is {t!r}",
+                reason="type_drift",
+            )
+
+
+def local_rows(df) -> list[dict] | None:
+    """The rows of ``df`` when it is a driver-local batch — its optimized
+    plan a ``LocalRelation`` of at most ``DRIVER_BATCH_MAX_KEYS`` rows,
+    whose ``collect()`` runs zero Spark jobs — else None (the Spark path;
+    not a decline). ``createDataFrame`` over pandas or an arrow table
+    (and projections/filters over one, which Catalyst folds into the
+    relation) qualifies; a list of tuples, ``spark.range`` and
+    foreachBatch frames are ``LogicalRDD``/``Range`` plans and do not.
+    The optimized plan, not ``isLocal()``, which is False for a
+    projected local frame."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() != "LocalRelation":
+        return None
+    if plan.data().size() > DRIVER_BATCH_MAX_KEYS:
+        return None
+    cols = df.columns
+    ts = [i for i, f in enumerate(df.schema) if f.dataType.simpleString() == "timestamp"]
+    rows = []
+    for r in df.collect():
+        vals = list(r)
+        for i in ts:
+            if vals[i] is not None:
+                # collect() renders an instant as the process's local wall
+                # time; the driver plane, like parquet, works in naive UTC
+                vals[i] = vals[i].astimezone(datetime.timezone.utc).replace(tzinfo=None)
+        rows.append(dict(zip(cols, vals)))
+    return rows
+
+
+def merge_local(
+    spark,
+    src,
+    target_path: str,
+    key_cols: list[str],
+    hash_cols: list[str] | None = None,
+    *,
+    num_buckets: int | None = None,
+    delete_keys=None,
+    compact_every: int | None = None,
+    on_compact=None,
+) -> dict | None:
+    """The driver plane of the public bucketed merges
+    (``mor.merge_upsert_mor``, ``writers.merge_upsert_partitioned``):
+    a driver-local ``src`` (and ``delete_keys`` frame, MOR only) runs
+    ``trickle_merge`` — or ``trickle_merge_bucketed`` when
+    ``num_buckets`` is given — through ``try_trickle``. Returns the
+    driver result, or None: the caller's Spark path runs, unchanged."""
+    if not trickle_enabled() or cdc.KEY_COL in src.columns:
+        # a source carrying its own _cdc_key is a managed table re-fed
+        # as a source: the Spark merge re-derives the key (and may hash
+        # the column) where the driver core would trust it
+        return None
+    rows = local_rows(src)
+    if rows is None:
+        return None
+    del_rows = None
+    if delete_keys is not None:
+        del_rows = local_rows(delete_keys)
+        if del_rows is None:
+            return None
+    jvm = spark._jvm
+
+    def land() -> dict | None:
+        kinds = table_kinds(target_path)
+        src_kinds = _frame_kinds(src)
+        cols = _data_cols(src_kinds)
+        if set(cols) != set(_data_cols(kinds)):
+            if num_buckets is None:
+                # the MOR drift fold's bucketed merge takes this route
+                # once more and counts the one decline
+                return None
+            raise DriverDecline(
+                f"schema drift: source columns {sorted(cols)} != state data "
+                f"columns {sorted(_data_cols(kinds))}",
+                reason="schema_drift",
+            )
+        # the Spark merge hashes the SOURCE's types, so a column whose
+        # rendering differs from the target's declines
+        check_source_kinds(src_kinds, kinds, cols)
+        del_kinds = _frame_kinds(delete_keys) if del_rows is not None else {}
+        if "timestamp" in {*src_kinds.values(), *del_kinds.values()} and spark.conf.get(
+            "spark.sql.session.timeZone"
+        ) not in ("UTC", "Etc/UTC", "GMT", "Z", "+00:00"):
+            # the Spark merge renders timestamps in the session zone, the
+            # driver renderer in UTC (the session factory's zone)
+            raise DriverDecline("non-UTC session time zone", reason="session_tz")
+        if num_buckets is not None:
+            return trickle_merge_bucketed(
+                target_path, rows, key_cols, num_buckets, hash_cols, jvm=jvm
+            )
+        dels = None
+        if del_rows is not None:
+            # the Spark path normalizes the frame's key columns with
+            # their own types: same rendering rule as the upserts
+            if not set(key_cols) <= set(del_kinds):
+                raise DriverDecline(
+                    "delete_keys frame lacks a key column", reason="schema_drift"
+                )
+            check_source_kinds(del_kinds, kinds, key_cols)
+            try:
+                dels = [
+                    dp.composite_key(
+                        [r[c] for c in key_cols], [kinds[c] for c in key_cols], jvm
+                    )
+                    for r in del_rows
+                ]
+            except dp.UnsupportedValue as e:
+                raise DriverDecline(str(e), reason="unrenderable") from e
+        return trickle_merge(
+            target_path, rows, key_cols, delete_keys=dels, hash_cols=hash_cols,
+            compact_every=compact_every, jvm=jvm,
+        )
+
+    return try_trickle(land, on_compact=on_compact)
+
+
+def _frame_kinds(df) -> dict[str, str | None]:
+    """Column → renderer kind of a Spark frame's declared types (None:
+    no driver-side rendering)."""
+    return {f.name: _SPARK_KINDS.get(f.dataType.simpleString()) for f in df.schema}

@@ -242,9 +242,7 @@ class MergePlan:
             return None
         delta = cdc.collect_digest_delta(self.dirty_ops)
         if delta is not None and deleted is not None:
-            d_del = cdc.collect_digest_delta(
-                deleted.select(cdc.KEY_COL, *cdc.digest_delete_delta_cols())
-            )
+            d_del = _delete_delta(deleted, "_tgt_hash")
             delta = delta + d_del if d_del is not None else None
         return None if delta is None else digest_store.apply_delta(self.tgt_dig, delta)
 
@@ -252,6 +250,29 @@ class MergePlan:
         if self.ops is not None:
             self.ops.unpersist()
         self.narrow.unpersist()
+
+
+def _delete_delta(deleted: DataFrame, old_hash: str):
+    return cdc.collect_digest_delta(
+        deleted.select(cdc.KEY_COL, *cdc.digest_delete_delta_cols(old_hash=old_hash))
+    )
+
+
+def fold_deleted_digest(target_path: str, victims: DataFrame) -> dict | None:
+    """The maintained digest of the state at ``target_path`` after
+    ``victims`` (live rows with their persisted ``_cdc_key`` and
+    ``row_hash``) are deleted: each folds out (count −1, its (key, hash)
+    pair xored out) of the valid sidecar — the delete/TTL twin of
+    ``MergePlan.fold_digest``. Load it before mutating the state, save
+    it after the publish. None when the state persists no key/hash, has
+    no valid sidecar, or the fold stood down (duplicate keys)."""
+    if cdc.KEY_COL not in victims.columns or "row_hash" not in victims.columns:
+        return None
+    dig = digest_store.load(target_path)
+    if dig is None:
+        return None
+    delta = _delete_delta(victims, "row_hash")
+    return None if delta is None else digest_store.apply_delta(dig, delta)
 
 
 def plan_merge(

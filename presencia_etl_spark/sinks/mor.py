@@ -57,7 +57,7 @@ from presencia_etl_spark.functions.pushdown import in_list
 from presencia_etl_spark.operators import cdc
 from presencia_etl_spark.sinks import digest_store
 from presencia_etl_spark.sinks.locking import single_writer
-from presencia_etl_spark.sinks.merge_plan import plan_merge
+from presencia_etl_spark.sinks.merge_plan import fold_deleted_digest, plan_merge
 from presencia_etl_spark.sinks.writers import (
     AUDIT_COLS,
     BUCKET_COL,
@@ -312,6 +312,13 @@ def merge_upsert_mor(
 ) -> dict[str, int]:
     """Upsert ``src`` writing ONLY the changed rows (a new delta dir).
 
+    A driver-local ``src`` (and ``delete_keys``) — a ``LocalRelation`` of
+    at most ``driver_mor.DRIVER_BATCH_MAX_KEYS`` rows, e.g.
+    ``createDataFrame`` over pandas or arrow — lands on the zero-job
+    driver plane (``driver_mor.merge_local``) unless ``txn``,
+    ``delete_missing`` or a caller digest is passed; its result adds
+    ``driver=True``. Declines and every other source run the Spark path.
+
     ``txn``: a ``sinks.txn.MultiTableTxn`` — the delta is STAGED instead
     of committed (invisible until ``txn.commit()``, no cursor bump, no
     auto-compaction, digest sidecar saves deferred to after publish).
@@ -422,6 +429,21 @@ def merge_upsert_mor(
     _gc_orphan_staging(target_path)
     _gc_orphan_compact_staging(target_path)
     _recover_empty_base(spark, target_path)
+    if txn is None and not delete_missing and src_digest is None and tgt_digest is None:
+        # A driver-local KB-sized batch takes the zero-job driver plane
+        # (sinks/driver_mor.py); anything else falls through unchanged.
+        from presencia_etl_spark.sinks import driver_mor
+
+        r = driver_mor.merge_local(
+            spark, src, target_path, key_cols, hash_cols,
+            delete_keys=delete_keys, compact_every=compact_every,
+            on_compact=lambda: compact_mor(
+                spark, target_path,
+                keep_last=_auto_keep_last(compact_every, compact_keep_last),
+            ),
+        )
+        if r is not None:
+            return r
 
     base = spark.read.parquet(base_path)
     infra = set(AUDIT_COLS) | {BUCKET_COL, cdc.KEY_COL, SEQ_COL}
@@ -806,7 +828,6 @@ def _tombstone_commit(
     honor the auto-compaction hook. ``victims`` must be live rows in the
     base layout (data + audit + ``_cdc_key`` + ``_kb``)."""
     meta = _read_meta(target_path)
-    new_dig = None
     victims = victims.cache()
     try:
         n = victims.count()
@@ -815,23 +836,13 @@ def _tombstone_commit(
             # the sidecar (if any) stays valid untouched — no load paid.
             return {"delete": 0, "delta_files": 0, "compacted": False}
         # Digest-sidecar maintenance: victims are live rows (one per key,
-        # carrying the persisted row_hash), so a delete folds cleanly —
-        # count −1, xor out the (key, hash) pair. Loaded after the count
-        # (the common zero-match TTL pass skips the fingerprint walk) but
+        # carrying the persisted row_hash). Loaded after the count (the
+        # common zero-match TTL pass skips the fingerprint walk) but
         # BEFORE the delta commit, validating against the pre-delete
         # listing (count() mutates nothing; the writer lock is held). A
         # TTL/erasure pass then no longer knocks the table's sync loop
         # back onto the scan path.
-        carry_dig = digest_store.load(target_path)
-        if carry_dig is not None:
-            delta = cdc.collect_digest_delta(
-                victims.select(
-                    cdc.KEY_COL,
-                    *cdc.digest_delete_delta_cols(old_hash="row_hash"),
-                )
-            )
-            if delta is not None:
-                new_dig = digest_store.apply_delta(carry_dig, delta)
+        new_dig = fold_deleted_digest(target_path, victims)
         out = victims.withColumn(DELETED_COL, F.lit(True)).withColumn(
             "updated_at", F.current_timestamp()
         )

@@ -39,6 +39,7 @@ from presencia_etl_spark.sinks.merge_plan import (
     AUDIT_COLS,
     BUCKET_COL,
     MergePlan,
+    fold_deleted_digest,
     hash_source,
     key_hash_view,
     plan_merge,
@@ -339,7 +340,6 @@ def delete_where_partitioned(
             "use delete_where_parquet for the flat layout."
         )
     victims = tgt.filter(predicate).cache()
-    new_dig = None
     try:
         n_victims = victims.count()
         if n_victims == 0:
@@ -348,17 +348,7 @@ def delete_where_partitioned(
         # victims out so an erasure pass doesn't knock the table's sync
         # loop back onto the scan path. Loaded after the count (zero-match
         # passes skip the walk), before any mutation.
-        if cdc.KEY_COL in tgt.columns and "row_hash" in tgt.columns:
-            carry_dig = digest_store.load(target_path)
-            if carry_dig is not None:
-                delta = cdc.collect_digest_delta(
-                    victims.select(
-                        cdc.KEY_COL,
-                        *cdc.digest_delete_delta_cols(old_hash="row_hash"),
-                    )
-                )
-                if delta is not None:
-                    new_dig = digest_store.apply_delta(carry_dig, delta)
+        new_dig = fold_deleted_digest(target_path, victims)
         dirty = [
             r[BUCKET_COL]
             for r in victims.select(BUCKET_COL).distinct().collect()
@@ -427,18 +417,7 @@ def delete_where_parquet(
     # the new dir lands — otherwise every flat erasure forces the next
     # sync onto the scan path. Flat states are small by design, so the
     # victims re-scan here is one cheap extra pass.
-    new_dig = None
-    if cdc.KEY_COL in tgt.columns and "row_hash" in tgt.columns:
-        carry_dig = digest_store.load(target_path)
-        if carry_dig is not None:
-            delta = cdc.collect_digest_delta(
-                tgt.filter(predicate).select(
-                    cdc.KEY_COL,
-                    *cdc.digest_delete_delta_cols(old_hash="row_hash"),
-                )
-            )
-            if delta is not None:
-                new_dig = digest_store.apply_delta(carry_dig, delta)
+    new_dig = fold_deleted_digest(target_path, tgt.filter(predicate))
     keep = tgt.filter(~F.coalesce(predicate, F.lit(False)))
     staged = target_path.rstrip("/") + "__rebucket_staged"
     retired = target_path.rstrip("/") + "__rebucket_retired"
@@ -970,7 +949,10 @@ def merge_upsert_partitioned(
     the update side.
 
     This is the plan shape of Delta's MERGE with partition pruning, with no
-    non-core dependency.
+    non-core dependency. A driver-local ``src`` (a ``LocalRelation`` of
+    at most ``driver_mor.DRIVER_BATCH_MAX_KEYS`` rows) rewrites its dirty
+    buckets on the zero-job driver plane instead
+    (``driver_mor.trickle_merge_bucketed``; result ``driver=True``).
     """
     _recover_interrupted_rebucket(target_path)
     if os.path.exists(target_path):
@@ -1006,6 +988,16 @@ def merge_upsert_partitioned(
 
     _recover_interrupted_swap(target_path)
     _gc_orphan_swap_staging(target_path)
+    if src_digest is None and tgt_digest is None:
+        # A driver-local KB-sized batch takes the zero-job driver plane
+        # (sinks/driver_mor.py); anything else falls through unchanged.
+        from presencia_etl_spark.sinks import driver_mor
+
+        r = driver_mor.merge_local(
+            spark, src, target_path, key_cols, hash_cols, num_buckets=num_buckets
+        )
+        if r is not None:
+            return r
     tgt = spark.read.parquet(target_path)
     if BUCKET_COL not in tgt.columns:
         # An implicit flat→bucketed migration can't be made crash-safe

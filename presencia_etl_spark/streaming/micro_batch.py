@@ -15,41 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 from presencia_etl_spark.sinks.writers import merge_upsert_parquet
 
 
-def _try_driver_micro_merge(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    target_path: str,
-    key_cols: list[str],
-) -> bool:
-    """Collect-and-merge a KB-sized micro-batch driver-side through the
-    consolidated trickle gate (``driver_mor.try_trickle``). Returns True
-    when the batch was fully applied (including compaction-due
-    follow-up); False → caller runs the Spark merge. Never wrong: any
-    shape the driver path can't reproduce exactly (incl. in-batch
-    duplicate keys, where the Spark merge picks an arbitrary winner)
-    declines inside ``trickle_merge``."""
-    from presencia_etl_spark.sinks import driver_mor as dm
-
-    if not dm.trickle_enabled():
-        return False  # checked before spending the sampling job
-    sample = batch_df.limit(dm.DRIVER_BATCH_MAX_KEYS + 1).collect()
-    if len(sample) > dm.DRIVER_BATCH_MAX_KEYS:
-        return False  # corpus-shaped trigger, not a decline
-    cols = batch_df.columns
-    rows = [{c: r[c] for c in cols} for r in sample]
-
-    def _compact() -> None:
-        from presencia_etl_spark.sinks.mor import compact_mor
-
-        compact_mor(spark, target_path)
-
-    r = dm.try_trickle(
-        lambda: dm.trickle_merge(target_path, rows, key_cols, jvm=spark._jvm),
-        on_compact=_compact,
-    )
-    return r is not None
-
-
 def incremental_upsert_stream(
     spark: SparkSession,
     source_path: str,
@@ -69,6 +34,11 @@ def incremental_upsert_stream(
     O(changes) delta and compaction amortizes across ``compact_every``
     batches instead of rewriting state per trigger.
 
+    A KB-sized MOR micro-batch is handed to the merge as a driver-local
+    frame (one sampling job: ``limit(N + 1).toArrow()`` re-wrapped with
+    ``createDataFrame``), so ``merge_upsert_mor`` lands it on its
+    zero-job driver plane (``sinks/driver_mor.merge_local``).
+
     ``digest_prune=False``: a micro-batch is a KNOWN subset — its
     micro-bucket digests are dirty nearly everywhere, so the digest
     COMPARE would be spent to prune nothing. Sidecar MAINTENANCE is
@@ -85,10 +55,13 @@ def incremental_upsert_stream(
         if batch_df.isEmpty():
             return
         if mode == "mor":
+            from presencia_etl_spark.sinks import driver_mor
             from presencia_etl_spark.sinks.mor import merge_upsert_mor
 
-            if _try_driver_micro_merge(spark, batch_df, target_path, key_cols):
-                return
+            if driver_mor.trickle_enabled():
+                t = batch_df.limit(driver_mor.DRIVER_BATCH_MAX_KEYS + 1).toArrow()
+                if t.num_rows <= driver_mor.DRIVER_BATCH_MAX_KEYS:
+                    batch_df = spark.createDataFrame(t)  # a LocalRelation
             merge_upsert_mor(spark, batch_df, target_path, key_cols,
                              digest_prune=False)
             return

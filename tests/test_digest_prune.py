@@ -548,6 +548,10 @@ _MERGES = {
 }
 
 
+def _read_state(spark, layout, t):
+    return mor.read_mor(spark, t) if layout == "mor" else spark.read.parquet(t)
+
+
 def _sparse_docs(spark, n=2000):
     """``_docs(n)`` with 5 updated keys (1..5) and 3 inserted keys."""
     df = _docs(spark, n + 3)
@@ -599,6 +603,23 @@ class TestMergeJobBudget:
         budget = self.BUDGET[(layout, shape)]
         assert n_jobs <= budget, f"{layout} {shape} merge ran {n_jobs} jobs"
         print(f"# jobs {layout} {shape}: {n_jobs}")
+
+    @pytest.mark.parametrize("layout", ["bucketed", "mor"])
+    def test_local_source_sparse_merge_runs_no_jobs(self, spark, tmp_path, layout):
+        """The same sparse merge from a driver-local source (pandas
+        through Arrow optimizes to a ``LocalRelation``) takes the
+        driver plane of the bucketed merges: zero Spark jobs."""
+        merge = _MERGES[layout]
+        t = str(tmp_path / layout)
+        base = _docs(spark, 2000)
+        merge(spark, base, t)
+        merge(spark, base, t)
+        src = spark.createDataFrame(_sparse_docs(spark).toPandas())
+        r, n_jobs = _jobs_of(spark, lambda: merge(spark, src, t))
+        assert r["driver"] is True
+        assert (r["insert"], r["update"], r["skip"]) == (3, 5, 1995)
+        assert n_jobs == 0, f"{layout} local-source merge ran {n_jobs} jobs"
+        assert _state(_read_state(spark, layout, t)) == _state(_sparse_docs(spark))
 
     def test_delete_keys_mor_job_budget(self, spark, tmp_path):
         """A 3-key explicit delete: one bounded key fetch, one tombstone

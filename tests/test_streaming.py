@@ -413,33 +413,37 @@ class TestConsumerLagSizedCompaction:
 
 class TestDriverMicroBatch:
     def test_tiny_batch_driver_merge_matches_spark(self, spark, tmp_path):
-        """A KB-sized micro-batch applies through the driver merge
-        (collect + zero-job trickle_merge) and produces the same state
-        a Spark-path twin gets; oversized/duplicate-key/absent-state
-        shapes decline."""
+        """A KB-sized micro-batch re-wrapped as a driver-local frame (the
+        foreachBatch body: ``limit(N + 1).toArrow()`` → ``createDataFrame``)
+        lands through ``merge_upsert_mor``'s zero-job driver plane and
+        produces the same state a Spark-path twin gets; absent-state,
+        duplicate-key and oversized shapes run the Spark path."""
+        import shutil
+
         from presencia_etl_spark.operators import cdc
+        from presencia_etl_spark.sinks import driver_mor as dm
         from presencia_etl_spark.sinks.mor import merge_upsert_mor, read_mor
-        from presencia_etl_spark.streaming import micro_batch as mb
 
         t1, t2 = str(tmp_path / "drv"), str(tmp_path / "spk")
         base = spark.createDataFrame(
             [(i, f"t{i % 4}", float(i)) for i in range(200)],
             "event_id long, event_type string, v double",
         )
-        for t in (t1, t2):
-            merge_upsert_mor(spark, base, t, ["event_id"], num_buckets=8,
+        r = merge_upsert_mor(spark, base, t1, ["event_id"], num_buckets=8,
                              compact_every=None)
+        assert "driver" not in r  # the initial load is a Spark write
+        shutil.copytree(t1, t2)
         batch = spark.createDataFrame(
             [(5, "mut", 9.5), (500, "new", 1.0)],
             "event_id long, event_type string, v double",
         )
-        # absent state declines (returns False)
-        assert not mb._try_driver_micro_merge(
-            spark, batch, str(tmp_path / "nope"), ["event_id"]
-        )
-        assert mb._try_driver_micro_merge(spark, batch, t1, ["event_id"])
-        merge_upsert_mor(spark, batch, t2, ["event_id"], digest_prune=False,
-                         compact_every=None)
+        local = spark.createDataFrame(batch.limit(dm.DRIVER_BATCH_MAX_KEYS + 1).toArrow())
+        r = merge_upsert_mor(spark, local, t1, ["event_id"], digest_prune=False,
+                             compact_every=None)
+        assert r["driver"] is True and (r["insert"], r["update"]) == (1, 1)
+        r2 = merge_upsert_mor(spark, batch, t2, ["event_id"], digest_prune=False,
+                              compact_every=None)
+        assert "driver" not in r2 and (r2["insert"], r2["update"]) == (1, 1)
         v1 = {
             r["event_id"]: (r["event_type"], r["row_hash"])
             for r in read_mor(spark, t1).collect()
@@ -457,17 +461,58 @@ class TestDriverMicroBatch:
         )
         assert d1 == d2
         # duplicate keys within a batch decline to the Spark merge
-        dup = spark.createDataFrame(
+        dm.decline_counts(reset=True)
+        dup = spark.createDataFrame(spark.createDataFrame(
             [(7, "a", 1.0), (7, "b", 2.0)],
             "event_id long, event_type string, v double",
-        )
-        assert not mb._try_driver_micro_merge(spark, dup, t1, ["event_id"])
-        # oversized batch declines before collecting everything
-        from presencia_etl_spark.sinks.driver_mor import DRIVER_BATCH_MAX_KEYS
-
-        big = spark.range(DRIVER_BATCH_MAX_KEYS + 10).select(
+        ).toArrow())
+        r = merge_upsert_mor(spark, dup, t1, ["event_id"], digest_prune=False,
+                             compact_every=None)
+        assert "driver" not in r and dm.decline_counts() == {"duplicate_keys": 1}
+        # an oversized batch is not driver-local: no decline, Spark path
+        big = spark.range(dm.DRIVER_BATCH_MAX_KEYS + 10).select(
             F.col("id").alias("event_id"),
             F.lit("x").alias("event_type"),
             F.lit(0.5).alias("v"),
         )
-        assert not mb._try_driver_micro_merge(spark, big, t1, ["event_id"])
+        assert big.limit(dm.DRIVER_BATCH_MAX_KEYS + 1).toArrow().num_rows > (
+            dm.DRIVER_BATCH_MAX_KEYS
+        )
+        assert dm.local_rows(big) is None
+
+    def test_stream_micro_batch_lands_on_driver_plane(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """The foreachBatch body hands a KB micro-batch to
+        ``merge_upsert_mor`` as a driver-local frame, so it lands through
+        the driver plane (``driver=True``) with zero merge-side Spark
+        work — no hand-rolled collect-and-gate at the call site."""
+        from presencia_etl_spark.sinks import driver_mor as dm
+        from presencia_etl_spark.sinks.mor import merge_upsert_mor, read_mor
+
+        src_dir, target = str(tmp_path / "in"), str(tmp_path / "state")
+        schema = "event_id long, event_type string"
+        merge_upsert_mor(
+            spark,
+            spark.createDataFrame([(i, "seed") for i in range(50)], schema),
+            target, ["event_id"], num_buckets=4, compact_every=None,
+        )
+        spark.createDataFrame([(3, "mut"), (99, "new")], schema).write.parquet(src_dir)
+        landed = []
+        real = dm.trickle_merge
+
+        def spy(*a, **kw):
+            landed.append(real(*a, **kw))
+            return landed[-1]
+
+        monkeypatch.setattr(dm, "trickle_merge", spy)
+        q = incremental_upsert_stream(
+            spark, src_dir, spark.read.parquet(src_dir).schema, target,
+            ["event_id"], str(tmp_path / "ckpt"), mode="mor",
+        )
+        q.awaitTermination(120)
+        assert [(r["driver"], r["insert"], r["update"]) for r in landed] == [
+            (True, 1, 1)
+        ]
+        got = {r["event_id"]: r["event_type"] for r in read_mor(spark, target).collect()}
+        assert len(got) == 51 and got[3] == "mut" and got[99] == "new"
